@@ -2376,8 +2376,9 @@ def _components_oracle() -> str:
 @query("dedup_transitive_components", oracle=_components_oracle())
 def dedup_transitive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dedup closure: connected components over the MinHash
-    near-dup pair graph (iterative label propagation vs the oracle's
-    recursive CTE); min id per component survives."""
+    near-dup pair graph (size-gated ``graph.connected_components`` —
+    driver union-find at this scale — vs the oracle's recursive CTE);
+    min id per component survives."""
     from .operators.graph import dedup_components
 
     docs = load(spark, sf_dir, "documents")
@@ -2389,14 +2390,16 @@ def dedup_transitive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_components_star", oracle=_components_oracle())
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same transitive closure as ``dedup_transitive_components`` but
-    through the **large-star / small-star** edge-rewrite algorithm
-    (Kiveris et al., SoCC'14; ``graph.connected_components_star``) —
-    the label-free CC formulation for edge lists at 10⁹+ vertices,
-    where min-label propagation's per-round vertex-label table becomes
-    a second corpus-sized join.  Each half-round is one groupBy + one
-    same-key re-join over the edge list only; rounds are O(log² n).
-    Value-oracled against the identical recursive-CTE closure, proving
-    the two algorithms agree end-to-end on real near-dup pairs."""
+    with the union-find size gate off (``algorithm="star"``, i.e.
+    ``connected_components(..., collect_threshold=0)``), so the
+    distributed **large-star / small-star** edge-rewrite rounds
+    (Kiveris et al., SoCC'14) run whatever the pair count — the path
+    every edge list above the gate takes.  Each half-round is one
+    groupBy + one same-key re-join over the edge list only, with no
+    per-vertex label table; rounds are O(log² n).  Value-oracled
+    against the identical recursive-CTE closure, proving the
+    distributed path and driver union-find agree end-to-end on real
+    near-dup pairs."""
     from .operators.graph import dedup_components
 
     docs = load(spark, sf_dir, "documents")
@@ -8220,7 +8223,7 @@ def docs_collocation_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase/concept clusters (``text.collocation_components``):
     connected components over the PMI collocation graph — the
     composition of the inverted-index bigram statistics and the
-    size-gated union-find / min-label closure.  The recursive-CTE
+    size-gated union-find / large-star/small-star closure.  The recursive-CTE
     oracle closes the identical edge set."""
     return textops.collocation_components(
         load(spark, sf_dir, "documents"), "text", min_count=2, min_pmi=1.5

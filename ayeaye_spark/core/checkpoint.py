@@ -48,6 +48,29 @@ def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def materialize_observed(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+    """Eager :func:`materialize` + aggregate metrics in ONE pass.
+
+    Iterative operators need, per round, (a) the round's frame
+    materialized with truncated lineage and (b) a tiny aggregate over
+    that same frame (convergence fingerprint, changed-row count, peel
+    count, seed row).  Done naively that is two jobs and two full reads;
+    ``Dataset.observe`` puts a ``CollectMetrics`` node at the plan root,
+    so the metrics are computed DURING the materialization job and the
+    second read disappears.  ``metrics`` maps names to aggregate
+    columns; returns ``(materialized_df, {name: value})``.  The
+    observation stays unnamed: two same-named observations in one plan
+    fail analysis.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    out = materialize(
+        df.observe(obs, *[v.alias(k) for k, v in metrics.items()]), eager=True
+    )
+    return out, obs.get
+
+
 def ckpt_eager(df: DataFrame) -> DataFrame:
     """``df.transform``-able eager :func:`materialize`."""
     return materialize(df, eager=True)

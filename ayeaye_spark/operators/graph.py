@@ -5,49 +5,24 @@ pairs; real corpus dedup needs the transitive closure — one surviving
 representative per connected component (A≈B, B≈C ⇒ drop two of three
 even if A and C never collided).
 
-:func:`connected_components` is iterative min-label propagation on the
-DataFrame API (the standard large-graph formulation — GraphX/GraphFrames
-aren't available to PySpark here, and the loop is a handful of joins):
-
-    label(v) ← min(label(v), min over neighbors u of label(u))
-
-repeated until a fixed point, with POINTER JUMPING (path halving —
-``label(v) ← label(label(v))``) each round, so convergence is
-O(log diameter) instead of O(diameter): a billion-node chain closes in
-~30 rounds, not a billion.  Dedup components are tiny clusters, so 2-4
-rounds in practice.  Per round: the propagation (edge join + aggregate)
-is computed once into a checkpoint, then one label self-join for the
-jump; ``localCheckpoint`` also truncates the growing lineage so round N
-doesn't replay rounds 1..N-1.
+:func:`connected_components` is the one CC entry point.  Edge lists that
+fit the driver close as union-find; larger ones run alternating
+**large-star / small-star** rounds (Kiveris et al., *Connected
+Components in MapReduce and Beyond*, SoCC'14) on the DataFrame API
+(GraphX/GraphFrames aren't available to PySpark here).  The star rounds
+rewrite the edge list itself toward one star per component and keep no
+per-vertex label table; the edge set shrinks every round, so late
+rounds only touch what is still unsettled.  Each round is
+``localCheckpoint``-ed with its convergence fingerprint observed on the
+same job, so round N never replays rounds 1..N-1, and a loop that hits
+its round cap raises instead of returning unconverged labels.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..core.checkpoint import ckpt_eager, ckpt_lazy
-
-
-def _ckpt_observed(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
-    """Eager ``localCheckpoint`` + aggregate metrics in ONE pass.
-
-    Every loop in this module needs, per round, (a) the round's frame
-    materialized with truncated lineage and (b) a tiny aggregate over
-    that same frame (convergence fingerprint, changed-row count, peel
-    count).  Done naively that is two jobs and two full reads per
-    round; ``Dataset.observe`` puts a ``CollectMetrics`` node at the
-    plan root, so the metrics are computed DURING the checkpoint
-    materialization job and the second read disappears — at corpus
-    scale the saved read is proportional to the edge list, not a
-    constant.  Returns ``(checkpointed_df, {name: value})``.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    ck = df.observe(
-        obs, *[v.alias(k) for k, v in metrics.items()]
-    ).transform(ckpt_eager)
-    return ck, obs.get
+from ..core.checkpoint import ckpt_eager, ckpt_lazy, materialize_observed
 
 
 def connected_components(
@@ -55,8 +30,8 @@ def connected_components(
     src: str,
     dst: str,
     *,
-    max_iterations: int = 20,
     collect_threshold: int = 200_000,
+    max_rounds: int = 30,
 ) -> DataFrame:
     """(vertex, component) — component = min vertex id reachable.
 
@@ -68,43 +43,40 @@ def connected_components(
     the corpus (pairs only exist where documents collide), so when the
     edge count is at most ``collect_threshold`` the closure runs as
     driver-side union-find — O(E α) in milliseconds, 2 Spark jobs total
-    instead of 2 per label-propagation round.  Above the threshold (or
-    with ``collect_threshold=0``) the distributed min-label loop below
-    handles edge lists of any size.  The default threshold is sized for
-    driver heap reality: collected ``Row`` tuples carry ~100x object
-    overhead over the raw ids, so 200k edges ≈ tens of MB — not the
-    hundreds of MB that 2M rows cost.
+    instead of one per star round.  Above the threshold (or with
+    ``collect_threshold=0``) the large-star/small-star rounds
+    (:func:`_star_components`) handle edge lists of any size; they
+    raise ``RuntimeError`` if ``max_rounds`` pass without a fixpoint.
+    The default threshold is sized for driver heap reality: collected
+    ``Row`` tuples carry ~100x object overhead over the raw ids, so 200k
+    edges ≈ tens of MB — not the hundreds of MB that 2M rows cost.
     """
     # ONE execution of the (possibly expensive) edge pipeline: an eager
-    # localCheckpoint materializes it exactly once; the count and the
-    # (bounded) collect below read the checkpointed blocks, and on
-    # overflow the distributed loop reuses them instead of recomputing
-    # the pipeline.  The previous limit(threshold+1).collect() probe
-    # paid executeTake's partition scale-up PLUS a lazy-checkpoint
-    # completion pass over the same upstream (measured ~2x the pipeline
-    # cost at bench scale), and the overflow branch recomputed
-    # everything from scratch.
+    # checkpoint materializes it exactly once, with the branch-decision
+    # count (when there is a branch) observed on the same job; the
+    # (bounded) collect or the star rounds read the checkpointed blocks
+    # instead of recomputing the pipeline.
     #
-    # EXCEPT for trivially-recomputable edge frames (a narrow chain
-    # over a file scan, round-13 / VERDICT r12 item 6): there the eager
-    # checkpoint would materialize a possibly HUGE edge list before the
-    # driver even decides, while the old take-probe touches a few
-    # partitions and the distributed loop's own lazy checkpoint reads
-    # the cheap scan once.  ``_cheap_edge_frame`` pre-gates on
-    # ``inputFiles()`` (derived/checkpointed pipelines list no files,
-    # so the hot dedup paths never pay the plan probe).
+    # EXCEPT for trivially-recomputable edge frames (a narrow chain over
+    # a file scan): there the eager checkpoint would materialize a
+    # possibly HUGE edge list before the driver even decides, while the
+    # take-probe touches a few partitions and the star loop's first
+    # checkpoint reads the cheap scan once.  ``_cheap_edge_frame``
+    # pre-gates on ``inputFiles()`` (derived/checkpointed pipelines list
+    # no files, so the hot dedup paths never pay the plan probe).
     sel = edges.select(src, dst)
-    if collect_threshold > 0 and _cheap_edge_frame(sel):
-        head = sel.limit(collect_threshold + 1).collect()
-        if len(head) <= collect_threshold:
-            return _union_find_components(edges, sel, head)
-        return _connected_components_distributed(sel, src, dst, max_iterations)
-    # the branch-decision count rides the checkpoint materialization
-    # job (_ckpt_observed) instead of a second action over the blocks
-    narrow, m = _ckpt_observed(sel, n=F.count(F.lit(1)))
+    if _cheap_edge_frame(sel):
+        if collect_threshold > 0:
+            head = sel.limit(collect_threshold + 1).collect()
+            if len(head) <= collect_threshold:
+                return _union_find_components(edges, sel, head)
+        return _star_components(sel, max_rounds)
+    if collect_threshold == 0:  # no branch to decide, so nothing to count
+        return _star_components(ckpt_eager(sel), max_rounds)
+    narrow, m = materialize_observed(sel, n=F.count(F.lit(1)))
     if int(m["n"] or 0) <= collect_threshold:
         return _union_find_components(edges, sel, narrow.collect())
-    return _connected_components_distributed(narrow, src, dst, max_iterations)
+    return _star_components(narrow, max_rounds)
 
 
 def _cheap_edge_frame(sel: DataFrame) -> bool:
@@ -150,87 +122,13 @@ def _union_find_components(edges: DataFrame, sel: DataFrame, rows: list) -> Data
     ).toDF("vertex", "component")
 
 
-def _connected_components_distributed(
-    edges: DataFrame, src: str, dst: str, max_iterations: int
-) -> DataFrame:
-    """Iterative min-label propagation (the any-scale path).
-
-    ``edges`` arrives either already materialized (the caller's eager
-    checkpoint — every expensive pipeline takes that path) or as a
-    trivially-recomputable scan chain; either way the direction-doubled
-    ``both`` frame below is checkpointed once, so the loop never
-    replays the input."""
-    narrow = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    both = narrow.union(narrow.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    both = both.distinct().transform(ckpt_lazy)
-
-    labels = (
-        both.select(F.col("a").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-    )
-
-    for _ in range(max_iterations):
-        neighbor_min = (
-            both.join(labels, both.b == labels.v)
-            .groupBy("a")
-            .agg(F.min("label").alias("nmin"))
-        )
-        prop = labels.join(neighbor_min, labels.v == neighbor_min.a, "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("plabel"),
-            F.col("label").alias("old_label"),
-        ).transform(ckpt_lazy)  # jump join reads this twice — once each side
-        # pointer jumping (path halving): label(v) <- label(label(v)).
-        # Plain neighbor-min propagation needs O(diameter) rounds — a
-        # long chain at 100 TB would never converge in a bounded loop;
-        # compressing label chains each round makes it O(log diameter).
-        lab2 = prop.select(F.col("v").alias("lv"), F.col("plabel").alias("llabel"))
-        # materialize + convergence count in ONE pass (_ckpt_observed):
-        # the changed-row count rides the checkpoint job instead of
-        # re-reading the label table
-        updated, m = _ckpt_observed(
-            prop.join(lab2, prop.plabel == lab2.lv, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("plabel"), F.coalesce("llabel", F.col("plabel"))
-                ).alias("new_label"),
-                "old_label",
-            ),
-            changed=F.sum(
-                (F.col("new_label") != F.col("old_label")).cast("long")
-            ),
-        )
-        changed = int(m["changed"] or 0)
-        labels = updated.select("v", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    return labels.select(F.col("v").alias("vertex"), F.col("label").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    *,
-    max_rounds: int = 30,
-) -> DataFrame:
-    """(vertex, component) via alternating **large-star / small-star**
-    (Kiveris et al., *Connected Components in MapReduce and Beyond*,
-    SoCC'14) — the shuffle-bounded alternative to min-label propagation
-    for edge lists too big to label row-by-row.
-
-    Same output contract as :func:`connected_components` (component =
-    min reachable vertex id; vertices taken from the edge list), so the
-    two are interchangeable and property-tested equal.
-
-    Why a second algorithm: min-label propagation carries a *label per
-    vertex* through every round — at 10⁹+ vertices that is a second
-    vertex-sized table joined against the edges twice per round.  The
-    star algorithm rewrites the *edge list itself* toward star graphs
-    (every node directly attached to its component minimum) and needs
-    no vertex-label state at all:
+def _star_components(edges: DataFrame, max_rounds: int) -> DataFrame:
+    """Alternating **large-star / small-star** rounds over a two-column
+    edge frame (the above-threshold branch of
+    :func:`connected_components`).  ``edges`` is read twice — the
+    canonicalization and the final vertex roll call — so it must be the
+    caller's checkpoint or a cheap scan chain, never an expensive
+    pipeline.
 
     * **large-star(u)**: connect every neighbor *larger* than u to the
       minimum of u's closed neighborhood — ``(v, m)`` for v ∈ N(u),
@@ -240,35 +138,24 @@ def connected_components_star(
 
     Each half-round is one groupBy + one re-join on the same key (the
     exchange is reused) + a distinct; the edge set only ever shrinks
-    toward the star form, and the expected round count is
-    O(log² n) with O(log n) observed in practice.  Every intermediate
-    is ``localCheckpoint``-ed so round N never replays rounds 1..N-1.
-    Convergence is detected by an order-independent edge-set
-    fingerprint (count + bit_xor of xxhash64(u, v) — XOR commutes and
-    cannot overflow under ANSI mode) — one tiny aggregate per round
-    instead of a two-sided anti-join.  The fingerprint is a
-    *stopping* heuristic only (a collision could at worst stop one
-    round early); correctness of the fixpoint is property-tested
-    against union-find and the label-propagation path.
+    toward the star form, and the expected round count is O(log² n)
+    with O(log n) observed in practice.  Convergence is detected by an
+    order-independent edge-set fingerprint (count + bit_xor of
+    xxhash64(u, v) — XOR commutes and cannot overflow under ANSI mode)
+    — one tiny aggregate per round instead of a two-sided anti-join.
+    The fingerprint is a *stopping* heuristic only (a collision could at
+    worst stop one round early); the fixpoint is property-tested
+    against union-find.
     """
-    # ONE execution of the (possibly expensive) edge pipeline: the
-    # canonicalization below AND the final vertex roll call both read
-    # it, and without this narrow checkpoint the full upstream (for the
-    # dedup queries: the LSH bucket join + Jaccard verify) ran once per
-    # consumer (guide §1.2 don't-compute-twice; same fix
-    # connected_components got in round 12).
-    narrow = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .transform(ckpt_eager)
-    )
+    narrow = edges.toDF("a", "b")
     # canonical strict edges: u > v, self-loops dropped, deduped once.
     # The convergence fingerprint rides each checkpoint's
-    # materialization job (_ckpt_observed) — one pass per round where
+    # materialization job — one pass per round where
     # checkpoint-then-aggregate was two.
     _fp_metrics = dict(
         c=F.count(F.lit(1)), h=F.expr("bit_xor(xxhash64(u, v))")
     )
-    e, m = _ckpt_observed(
+    e, m = materialize_observed(
         narrow.where(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct(),
@@ -294,7 +181,7 @@ def connected_components_star(
         # ---- small-star: canonical edges all group at their LARGE
         # endpoint, so N(u)∩{<=u} is exactly the v side of (u, v) ----
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        e, m = _ckpt_observed(
+        e, m = materialize_observed(
             large.join(smins, "u")
             .where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -306,10 +193,14 @@ def connected_components_star(
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint within max_rounds={max_rounds}"
+            " large-star/small-star rounds"
+        )
 
-    # fixpoint edges form stars (child, root); roots label themselves.
-    # groupBy-min is a safety net for the capped-rounds case, where a
-    # vertex may still carry edges to more than one candidate root.
+    # fixpoint edges form stars (child, root); roots label themselves,
+    # and the groupBy folds a root's one row per child into one
     labels = (
         e.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
         .union(e.select(F.col("v").alias("vertex"), F.col("v").alias("component")))
@@ -376,8 +267,8 @@ def k_core(
         # the (small) peel frontier is materialized once per round and
         # feeds the emptiness check + both anti-joins without replaying
         # the degree aggregate; the emptiness count rides the
-        # checkpoint job (_ckpt_observed) instead of a second action
-        low, m = _ckpt_observed(
+        # checkpoint job (materialize_observed) instead of a second action
+        low, m = materialize_observed(
             _degrees(e).where(F.col("degree") < k).select("vertex"),
             n=F.count(F.lit(1)),
         )
@@ -405,15 +296,14 @@ def dedup_components(
     components; the minimum id in each component survives.  Isolated
     docs are their own (surviving) component.
 
-    ``algorithm``: ``"auto"`` (adaptive union-find / label
-    propagation, :func:`connected_components`) or ``"star"`` (the
-    label-free large-star/small-star rewrite,
-    :func:`connected_components_star`) — identical output, different
-    scale trade-off (see the star docstring)."""
+    ``algorithm``: ``"auto"`` (:func:`connected_components` with its
+    default union-find size gate) or ``"star"`` (``collect_threshold=0``:
+    the large-star/small-star rounds whatever the edge count) —
+    identical output."""
     pair_a = pair_a or f"{id_col}_a"
     pair_b = pair_b or f"{id_col}_b"
     if algorithm == "star":
-        comps = connected_components_star(pairs, pair_a, pair_b)
+        comps = connected_components(pairs, pair_a, pair_b, collect_threshold=0)
     elif algorithm == "auto":
         comps = connected_components(pairs, pair_a, pair_b)
     else:
@@ -584,7 +474,7 @@ def pagerank_exact(
         .transform(ckpt_lazy)
     )
     # node table materialization + node count in one pass
-    nodes, _m = _ckpt_observed(
+    nodes, _m = materialize_observed(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct(),

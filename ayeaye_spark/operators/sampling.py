@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..core.checkpoint import ckpt_eager, ckpt_lazy
+from ..core.checkpoint import ckpt_lazy, materialize_observed
 
 #: LCG constants (glibc's) for the deterministic bucket in [0, 1000).
 HASH_A = 1103515245
@@ -540,11 +540,8 @@ def systematic_weighted_sample(
     )
     # reused by total + selection; the total-weight max rides the
     # checkpoint materialization job (observe) instead of a second read
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    cum = cum.observe(_obs, F.max("_cum").alias("_w")).transform(ckpt_eager)
-    total = _obs.get["_w"]
+    cum, m = materialize_observed(cum, _w=F.max("_cum"))
+    total = m["_w"]
     stride = max(1, total // n)
     offset = stride // 2
     # hits in (cum-w, cum]: floor((cum-offset)/stride) - floor((cum-w-offset)/stride)

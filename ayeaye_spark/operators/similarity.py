@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
-from ..core.checkpoint import ckpt_eager, ckpt_lazy
+from ..core.checkpoint import ckpt_lazy, materialize_observed
 
 SPARK = P.SPARK
 
@@ -1344,15 +1344,11 @@ def kcenter_coreset(
     # (Dataset.observe — struct min compares the unique id first, so it
     # returns exactly the smallest-id row) instead of a separate
     # sort-limit action over the blocks (guide §1.2)
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    base = df.select(id_col, vec_col).observe(
-        _obs,
-        F.min(F.struct(F.col(id_col).alias("i"),
-                       F.col(vec_col).alias("v"))).alias("s"),
-    ).transform(ckpt_eager)
-    seed = _obs.get["s"]
+    base, m = materialize_observed(
+        df.select(id_col, vec_col),
+        s=F.min(F.struct(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))),
+    )
+    seed = m["s"]
     if seed is None:
         raise ValueError("kcenter_coreset: empty input")
     chosen = [(seed["i"], [float(x) for x in seed["v"]])]

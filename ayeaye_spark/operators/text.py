@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
-from ..core.checkpoint import ckpt_eager, ckpt_lazy
+from ..core.checkpoint import ckpt_lazy, materialize_observed
 
 SPARK = P.SPARK
 
@@ -1398,8 +1398,8 @@ def collocation_components(
     pair clears both the count floor and the PMI threshold.  The
     composition demo of the operator library: :func:`_scored_bigrams`
     (inverted-index bigram statistics) feeding
-    ``graph.connected_components`` (size-gated union-find / distributed
-    min-label propagation).  Returns ``(word, component)`` for every
+    ``graph.connected_components`` (size-gated union-find /
+    large-star/small-star rounds).  Returns ``(word, component)`` for every
     word in the graph, component = lexicographic min reachable word.
     """
     from . import graph
@@ -1749,13 +1749,11 @@ def train_hashed_classifier(
     ).where(F.expr("size(_f) > 0"))
     # corpus count rides the feature checkpoint's materialization job
     # (one pass, not checkpoint + count)
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    feats = feats.observe(_obs, F.count(F.lit(1)).alias("n")).transform(ckpt_eager)
-    n_docs = int(_obs.get["n"] or 0)
+    feats, m = materialize_observed(feats, n=F.count(F.lit(1)))
+    n_docs = int(m["n"] or 0)
     if n_docs == 0:
         raise ValueError("train_hashed_classifier: no non-empty documents")
+    from pyspark.sql import Observation
 
     w = [0.0] * dim
     history = []

@@ -25,16 +25,9 @@ CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, %(here)r)
 from ayeaye_spark.catalog import QUERIES
-from ayeaye_spark.core.session import get_spark
+from bench import _fresh_spark
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark("opt_ab")
-spark.range(1_000_000).selectExpr("sum(id)").collect()
-spark.range(1_000_000).selectExpr(
-    "sum(cast(id as decimal(27,2))) as a", "sum(cast(id as decimal(27,6))) as b"
-).collect()
-spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-spark.range(1_000).toPandas()
-spark.range(10).mapInPandas(lambda it: it, "id long").collect()
+spark = _fresh_spark(sf_dir)
 out = {}
 for name in %(names)r:
     best = None

@@ -27,7 +27,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 from ayeaye_spark.catalog import QUERIES  # noqa: E402
-from ayeaye_spark.core.session import get_spark  # noqa: E402
+from bench import _fresh_spark  # noqa: E402
 
 
 def main() -> None:
@@ -51,15 +51,8 @@ def main() -> None:
         ranked = sorted(bench["queries"].items(), key=lambda kv: -kv[1])
         names = [n for n, _ in ranked[:top_n] if n in QUERIES]
 
-    spark = get_spark("opt_profile")
-    # same warmup rites as bench.py so run2 is comparable to BENCH numbers
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(1_000_000).selectExpr(
-        "sum(cast(id as decimal(27,2))) as a", "sum(cast(id as decimal(27,6))) as b"
-    ).collect()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-    spark.range(1_000).toPandas()
-    spark.range(10).mapInPandas(lambda it_: it_, "id long").collect()
+    # bench.py's session + warm-up rites, so run2 is comparable to BENCH numbers
+    spark = _fresh_spark(sf_dir)
 
     plans_dir = os.path.join(HERE, "plans", os.environ.get("AYEAYE_PLANS_ROUND", "r13"))
     if tag:

@@ -20,22 +20,22 @@ def checkpoint_dir(spark):
 
 def _components(spark, algorithm):
     """One graph loop (the module the escape hatch matters most for):
-    a two-component edge list through both CC implementations."""
-    from ayeaye_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    a two-component edge list through both branches of
+    ``connected_components``.  ``"star"`` forces the large-star/small-star
+    rounds (``collect_threshold=0``), the path that calls materialize()
+    per round; ``"labelprop"`` (the case name of the removed
+    label-propagation variant) takes the default size gate, whose one
+    eager materialization feeds the driver-side union-find."""
+    from ayeaye_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (10, 11), (12, 11), (5, 5)],
         "a long, b long",
     )
     if algorithm == "star":
-        out = connected_components_star(edges, "a", "b")
-    else:
-        # collect_threshold=0 forces the distributed loop — the path
-        # that actually calls materialize() per round
         out = connected_components(edges, "a", "b", collect_threshold=0)
+    else:
+        out = connected_components(edges, "a", "b")
     return sorted(tuple(r) for r in out.collect())
 
 EXPECTED = sorted(

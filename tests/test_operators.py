@@ -454,17 +454,28 @@ class TestJaccardFrequencyPruning:
         assert pruned_pairs[(1, 2)] == full_pairs[(1, 2)]
 
 
+def _shuffled_chains(rng, n_chains, length):
+    """``n_chains`` disjoint paths of ``length`` edges over shuffled ids."""
+    ids = rng.sample(range(10**6), n_chains * (length + 1))
+    return [(ids[c * (length + 1) + i], ids[c * (length + 1) + i + 1])
+            for c in range(n_chains) for i in range(length)]
+
+
+def _components(edges, **kw):
+    """{vertex: component} of ``connected_components`` over (a, b)."""
+    from ayeaye_spark.operators.graph import connected_components
+
+    return {r["vertex"]: r["component"]
+            for r in connected_components(edges, "a", "b", **kw).collect()}
+
+
 class TestConnectedComponents:
     def test_chain_and_isolated(self, spark):
-        from ayeaye_spark.operators.graph import connected_components, dedup_components
+        from ayeaye_spark.operators.graph import dedup_components
 
         # components: {1,2,3} via chain, {7,9}; 5 isolated
         edges = spark.createDataFrame([(1, 2), (2, 3), (9, 7)], ["a", "b"])
-        comps = {
-            r["vertex"]: r["component"]
-            for r in connected_components(edges, "a", "b").collect()
-        }
-        assert comps == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
+        assert _components(edges) == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
         docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 9)], ["doc_id"])
         pairs = edges.selectExpr("a AS doc_id_a", "b AS doc_id_b")
@@ -476,39 +487,32 @@ class TestConnectedComponents:
         }
 
     def test_single_edge_convergence(self, spark):
-        from ayeaye_spark.operators.graph import connected_components
-
         edges = spark.createDataFrame([(10, 4)], ["a", "b"])
-        comps = {r["vertex"]: r["component"]
-                 for r in connected_components(edges, "a", "b").collect()}
-        assert comps == {10: 4, 4: 4}
+        assert _components(edges) == {10: 4, 4: 4}
 
     def test_distributed_path_matches_union_find(self, spark):
-        from ayeaye_spark.operators.graph import connected_components
+        import random
 
-        # long chains + cliques + isolated pairs, shuffled ids
+        import pytest
+
+        # long chains + cliques + isolated pairs
         raw = []
         for c in range(5):  # 5 chains of 40 (diameter stress)
             raw += [(c * 1000 + i, c * 1000 + i + 1) for i in range(40)]
         raw += [(10_000 + i, 10_000 + j) for i in range(6) for j in range(i + 1, 6)]
         raw += [(20_000, 30_000), (30_000, 25_000)]
-        edges = spark.createDataFrame(raw, ["a", "b"])
-
-        driver = {r["vertex"]: r["component"]
-                  for r in connected_components(edges, "a", "b").collect()}
-        # collect_threshold=0 forces the min-label-propagation loop
-        dist = {r["vertex"]: r["component"]
-                for r in connected_components(
-                    edges, "a", "b", collect_threshold=0, max_iterations=50
-                ).collect()}
-        assert dist == driver
+        # plus chains over shuffled ids, where id order says nothing
+        # about position on the chain
+        rng = random.Random(5)
+        for rows in (raw, _shuffled_chains(rng, 1, 60), _shuffled_chains(rng, 5, 300)):
+            edges = spark.createDataFrame(rows, ["a", "b"])
+            # collect_threshold=0 forces the large-star/small-star rounds
+            assert _components(edges, collect_threshold=0) == _components(edges)
+        # a round cap the loop cannot close the chains in is loud
+        with pytest.raises(RuntimeError, match="max_rounds=2"):
+            _components(edges, collect_threshold=0, max_rounds=2)
 
     def test_star_algorithm_matches_union_find(self, spark):
-        from ayeaye_spark.operators.graph import (
-            connected_components,
-            connected_components_star,
-        )
-
         # chains (diameter stress), a clique, a vee, a self-loop-only
         # vertex, and duplicate/reversed edges — shuffled
         import random
@@ -522,18 +526,11 @@ class TestConnectedComponents:
         rng.shuffle(raw)
         edges = spark.createDataFrame(raw, ["a", "b"])
 
-        ref = {r["vertex"]: r["component"]
-               for r in connected_components(edges, "a", "b").collect()}
-        star = {r["vertex"]: r["component"]
-                for r in connected_components_star(edges, "a", "b").collect()}
-        assert star == ref
+        star = _components(edges, collect_threshold=0)
+        assert star == _components(edges)
         assert star[99] == 99  # self-loop-only vertex labels itself
 
     def test_star_random_graphs_match_driver_union_find(self, spark):
-        from ayeaye_spark.operators.graph import (
-            connected_components,
-            connected_components_star,
-        )
         import random
 
         for seed in (3, 17):
@@ -541,20 +538,14 @@ class TestConnectedComponents:
             n, m = 400, 500
             raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
             edges = spark.createDataFrame(raw, ["a", "b"])
-            ref = {r["vertex"]: r["component"]
-                   for r in connected_components(edges, "a", "b").collect()}
-            star = {r["vertex"]: r["component"]
-                    for r in connected_components_star(edges, "a", "b").collect()}
-            assert star == ref, f"seed {seed}"
+            star = _components(edges, collect_threshold=0)
+            assert star == _components(edges), f"seed {seed}"
 
     def test_star_long_chain_converges(self, spark):
-        from ayeaye_spark.operators.graph import connected_components_star
-
-        # diameter 250: label propagation without jumping would need 250
-        # rounds; the star alternation closes it within the default cap
+        # diameter 250: the star alternation closes it within the
+        # default round cap
         edges = spark.createDataFrame([(i, i + 1) for i in range(250)], ["a", "b"])
-        comps = {r["vertex"]: r["component"]
-                 for r in connected_components_star(edges, "a", "b").collect()}
+        comps = _components(edges, collect_threshold=0)
         assert set(comps.values()) == {0}
         assert len(comps) == 251
 
@@ -1590,17 +1581,12 @@ class TestMediaParserProperties:
 
 class TestPointerJumpingConvergence:
     def test_long_chain_converges_in_log_rounds(self, spark):
-        from ayeaye_spark.operators.graph import connected_components
-
-        # a 300-edge chain has diameter 300: plain min-label propagation
-        # cannot close it in 12 rounds; pointer jumping must
+        # a 300-edge chain has diameter 300: the star rounds close it in
+        # 10 rounds, the last of which confirms the fixpoint
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(300)], ["a", "b"]
         )
-        comps = {r["vertex"]: r["component"]
-                 for r in connected_components(
-                     edges, "a", "b", collect_threshold=0, max_iterations=12
-                 ).collect()}
+        comps = _components(edges, collect_threshold=0, max_rounds=10)
         assert set(comps.values()) == {0}
         assert len(comps) == 301
 
@@ -9149,19 +9135,22 @@ class TestCCProbeGate:
         ckpt = scan_chain.localCheckpoint(eager=True)
         assert not _cheap_edge_frame(ckpt.select("a", "b"))
 
-    def test_cheap_and_expensive_paths_agree(self, spark):
-        import pyspark.sql.functions as F
-
-        from ayeaye_spark.operators.graph import connected_components
+    def test_cheap_and_expensive_paths_agree(self, spark, monkeypatch):
+        from ayeaye_spark.core import checkpoint
 
         scan_chain = self._edges_from_scan(spark)
         # force the derived/eager-checkpoint path with a no-op widening
         # (distinct) of the same edge set
         derived = scan_chain.distinct()
-        a = sorted(map(tuple, connected_components(scan_chain, "a", "b").collect()))
-        b = sorted(map(tuple, connected_components(derived, "a", "b").collect()))
-        assert a == b and len(a) > 0
-        # and the distributed loop agrees on the cheap frame too
-        c = sorted(map(tuple, connected_components(
-            scan_chain, "a", "b", collect_threshold=0).collect()))
-        assert a == c
+        a = _components(scan_chain)
+        assert a == _components(derived) and len(a) > 0
+        # and the star rounds agree on both frames; only the derived one
+        # pays an up-front edge materialization
+        calls = []
+        real = checkpoint.materialize
+        monkeypatch.setattr(checkpoint, "materialize",
+                            lambda df, **kw: calls.append(1) or real(df, **kw))
+        assert _components(scan_chain, collect_threshold=0) == a
+        n_cheap = len(calls)
+        assert _components(derived, collect_threshold=0) == a
+        assert len(calls) - n_cheap == n_cheap + 1
