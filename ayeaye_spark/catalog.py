@@ -2606,11 +2606,11 @@ def dedup_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size-gated: vectorized all-pairs scan (bit-identical to the
-    # crossJoin+fold exact variant — tests assert so) while the corpus
-    # fits a broadcast matrix; LSH-bucketed prefilter beyond that, so
-    # the registered operator never collects an unbounded corpus to the
+    # oracle's fold — tests assert so against a Python fold) while the
+    # corpus fits a broadcast matrix; banded LSH beyond that, so the
+    # registered operator never collects an unbounded corpus to the
     # driver.
-    return similarity.embedding_near_dup_pairs_auto(
+    return similarity.embedding_near_dup_pairs(
         load(spark, sf_dir, "embeddings"), threshold=0.4
     )
 
@@ -3069,7 +3069,7 @@ def emb_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ppm, so the check is exact while the pair generation reuses the
     production path."""
     emb = load(spark, sf_dir, "embeddings")
-    pairs = similarity.embedding_near_dup_pairs_auto(emb, threshold=0.4)
+    pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.4)
     lab = emb.select("vec_id", "label")
     labeled = (
         pairs.join(lab.withColumnRenamed("vec_id", "vec_id_a")

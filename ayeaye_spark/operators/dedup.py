@@ -868,41 +868,6 @@ def ngram_jaccard_join(
     )
 
 
-def set_jaccard_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    set_col: str,
-    *,
-    threshold: float = 0.3,
-    method: str = "index",
-    max_item_df: int | str | None = None,
-) -> DataFrame:
-    """Two-table variant of :func:`set_jaccard_pairs` over precomputed
-    set columns (same name in both frames) — see
-    :func:`ngram_jaccard_join` for the R-S join semantics."""
-    if threshold <= 0:
-        raise ValueError("inverted-index jaccard join requires threshold > 0")
-    _tune_session(left)
-    pl = left.select(
-        F.col(left_id).alias("_id"),
-        F.array_distinct(F.col(set_col)).alias("_hashset"),
-        F.lit(0).alias("_side"),
-    )
-    pr = right.select(
-        F.col(right_id).alias("_id"),
-        F.array_distinct(F.col(set_col)).alias("_hashset"),
-        F.lit(1).alias("_side"),
-    )
-    return _jaccard_join_prepped(
-        pl.unionByName(pr), left_id, threshold=threshold,
-        has_block=False, max_item_df=max_item_df,
-        n_rows=lambda: left.count() + right.count(), method=method,
-        cross_side=True, out_cols=(f"{left_id}_a", f"{right_id}_b"),
-    )
-
-
 def weighted_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -241,9 +241,9 @@ def k_core(
     incident to peeled vertices — all shuffles keyed by vertex; no
     labels, no windows, no driver state beyond the peel count.  The
     edge list only shrinks.  Rounds are bounded by the peeling depth
-    (typically a handful; worst case a path peels one layer per round,
-    capped by ``max_rounds`` — survivors at the cap are a SUPERSET of
-    the true core, and the returned degrees are >= k either way).
+    (typically a handful; worst case a path peels one layer per round).
+    If all ``max_rounds`` rounds still peel vertices it raises
+    ``RuntimeError`` rather than return a superset of the core.
     Every round's frontier is ``localCheckpoint``-ed so round N never
     replays rounds 1..N-1.
     """
@@ -278,6 +278,10 @@ def k_core(
             e.join(low, e.u == low.vertex, "left_anti")
             .join(low, F.col("v") == low.vertex, "left_anti")
             .transform(ckpt_eager)
+        )
+    else:
+        raise RuntimeError(
+            f"k_core: still peeling vertices after max_rounds={max_rounds} rounds"
         )
     return _degrees(e).where(F.col("degree") >= k)
 

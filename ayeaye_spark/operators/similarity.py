@@ -1,22 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
-North-star operators (BASELINE.json): approximate-nearest-neighbor over
-an embedding column.
+North-star operators (BASELINE.json): nearest-neighbor search and
+near-duplicate detection over an embedding column.
 
-* :func:`cosine_topk` — brute-force exact top-k: broadcast the (small)
-  query set, one scan over the corpus, per-query window top-k.  At 100 TB
-  this is the correct *exact* plan: embarrassingly parallel scan, shuffle
-  only of (n_queries × corpus_partitions × k) candidate rows.
-* :func:`ivf_topk` — IVF-style bucketed ANN: corpus vectors are assigned
-  to their nearest centroid once (scan + broadcast of centroids), queries
-  probe only their own cell → the scan shrinks by ~|cells|.
-* :func:`hyperplane_lsh_topk` — sign-of-dot-product LSH bucketing with
-  deterministic pseudo-hyperplanes (portable arithmetic → oracle-able).
+* :func:`cosine_topk` / :func:`cosine_topk_vectorized` — brute-force
+  exact top-k: broadcast the (small) query set, one scan over the
+  corpus, per-query top-k.  At 100 TB this is the correct *exact* plan:
+  embarrassingly parallel scan, shuffle only of (n_queries ×
+  corpus_partitions × k) candidate rows.
+* :func:`assign_cells_vectorized` + :func:`ivf_topk_from_cells` —
+  IVF-style bucketed ANN: corpus vectors are assigned to their nearest
+  centroid once (scan + broadcast of centroids), queries probe only
+  their own cell → the scan shrinks by ~|cells|.
+* :func:`with_lsh_bucket_vectorized` — sign-of-dot-product LSH bucket
+  with deterministic pseudo-hyperplanes; :func:`hyperplane_signature`
+  is the same signature as a portable SQL expression (the oracle side).
 * :func:`embedding_near_dup_pairs` — near-duplicate vector pairs
-  (cosine ≥ threshold), the embedding-space dedup path.
+  (cosine ≥ threshold), size-gated between the exact all-pairs scan and
+  banded LSH: the embedding-space dedup path.
 
-Dot products use ``zip_with`` + ``aggregate`` — JVM codegen, sequential
-accumulation order (bit-identical to the DuckDB oracle's fold).
+Every dot product accumulates left to right from +0.0, the DuckDB
+oracle's fold order, so cosines are bit-identical to the oracle.  Row
+pairs that a join has already formed are scored by a SQL expression
+(``_cos``: a ``zip_with`` + ``aggregate`` fold, or an unrolled sum when
+the dimension is known); scans against a broadcast matrix run in numpy
+over Arrow batches (``_seq_dot_matrix``).  ``cosine_topk`` is the one
+operator with both backends: its catalog callers move to the vectorized
+twin only per measured A/B.
 """
 
 from __future__ import annotations
@@ -40,15 +50,6 @@ def _cos(a: str, b: str, dim: int | None) -> str:
     if dim is not None:
         return P.cosine_unrolled(a, b, dim, SPARK)
     return P.cosine(_as_double(a), _as_double(b), SPARK)
-
-
-def with_unit_norm(df: DataFrame, vec_col: str, out_col: str = "unit_vec") -> DataFrame:
-    """L2-normalize once up front so cosine becomes a plain dot product."""
-    dbl = _as_double(vec_col)
-    return df.withColumn("_dvec", F.expr(dbl)).withColumn(
-        out_col,
-        F.expr(f"transform(_dvec, x -> x / {P.norm('_dvec', SPARK)})"),
-    ).drop("_dvec")
 
 
 def cosine_topk(
@@ -85,55 +86,6 @@ def cosine_topk(
     )
 
 
-def assign_cells(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """IVF assignment: each vector → nearest centroid by cosine.
-
-    ``centroids`` (id_col, vec_col) is broadcast; ties break on smaller
-    centroid id (deterministic).
-    """
-    cent = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_centvec")
-    )
-    scored = corpus.crossJoin(F.broadcast(cent)).withColumn(
-        "_sim", F.expr(_cos(vec_col, "_centvec", dim))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_centvec", "_sim")
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int | None = None,
-) -> DataFrame:
-    """ANN top-k probing only the query's IVF cell (1-probe).
-
-    Approximate by construction; the oracle replays the identical cell
-    assignment, so results still hash-match.
-    """
-    corpus_cells = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col, dim=dim)
-    query_cells = assign_cells(queries, centroids, id_col=id_col, vec_col=vec_col, dim=dim)
-    return ivf_topk_from_cells(
-        corpus_cells, query_cells, id_col=id_col, vec_col=vec_col, k=k, dim=dim
-    )
-
-
 def ivf_topk_from_cells(
     corpus_cells: DataFrame,
     query_cells: DataFrame,
@@ -143,9 +95,11 @@ def ivf_topk_from_cells(
     k: int = 5,
     dim: int | None = None,
 ) -> DataFrame:
-    """IVF top-k over pre-assigned cells.  Use when queries come from the
-    corpus itself: one :func:`assign_cells` pass, queries filtered from it
-    — halves the assignment work vs calling :func:`ivf_topk`."""
+    """IVF top-k (1-probe) over pre-assigned cells: each query scores
+    only the corpus vectors of its own cell.  Cells come from
+    :func:`assign_cells_vectorized`; when queries come from the corpus
+    itself, one assignment pass serves both sides.  Approximate by
+    construction; the oracle replays the identical cell assignment."""
     c = corpus_cells.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"), "centroid_id"
     )
@@ -193,38 +147,6 @@ def hyperplane_signature(vec_col: str, n_planes: int, dim: int) -> str:
     return build
 
 
-def hyperplane_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 6,
-    dim: int = 64,
-) -> DataFrame:
-    """ANN top-k among vectors sharing the query's LSH bucket."""
-    sig_builder = hyperplane_signature(vec_col, n_planes, dim)
-    sig_expr = sig_builder(SPARK)
-    c = corpus.withColumn("bucket", F.expr(sig_expr)).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"), "bucket"
-    )
-    q = queries.withColumn("bucket", F.expr(sig_expr)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"), "bucket"
-    )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.expr(_cos("_qvec", "_cvec", None)))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
-    )
-
-
 def embedding_near_dup_pairs_banded(
     df: DataFrame,
     *,
@@ -241,17 +163,16 @@ def embedding_near_dup_pairs_banded(
     approximate path (high recall by band amplification, bounded
     candidate volume by bucket granularity).
 
-    The single-signature variant (:func:`embedding_near_dup_pairs`,
-    ``exact=False``) has 2^n_planes buckets TOTAL — 64 at its default —
-    so pair volume within a bucket is quadratic in n/64: unusable at a
-    billion vectors.  Banding fixes both axes at once:
+    A single 6-plane signature has 2^6 = 64 buckets TOTAL, so pair
+    volume within a bucket is quadratic in n/64: unusable at a billion
+    vectors.  Banding fixes both axes at once:
 
     * each of ``bands`` bands hashes the vector with its OWN
       ``planes_per_band`` hyperplanes → 2^planes_per_band buckets per
       band (4096 at the default) — occupancy n/4096, not n/64;
     * a pair is a candidate if it collides in ANY band: at cosine 0.95
       (plane-agreement ~0.9) recall is 1-(1-0.9^12)^6 ≈ 0.86 vs 0.53
-      for the old 6-plane single signature.  Raise ``planes_per_band``
+      for a single 6-plane signature.  Raise ``planes_per_band``
       (narrower buckets, lower per-band recall) and ``bands`` (recall
       back up) together for larger corpora.
 
@@ -319,50 +240,10 @@ def embedding_near_dup_pairs_banded(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 6,
-    dim: int = 64,
-    cosine_dim: int | None = None,
-    exact: bool = False,
-) -> DataFrame:
-    """Vector pairs with cosine ≥ threshold (embedding-space near-dups).
-
-    ``exact=False`` prefilters through LSH buckets (near-identical vectors
-    collide with high probability); ``exact=True`` is the all-pairs check
-    used as the small-scale oracle-verifiable variant.
-    """
-    if exact:
-        base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        joined = base.alias("l").crossJoin(base.alias("r")).where(
-            F.col("l._id") < F.col("r._id")
-        )
-    else:
-        sig_expr = hyperplane_signature(vec_col, n_planes, dim)(SPARK)
-        base = df.withColumn("bucket", F.expr(sig_expr)).select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), "bucket"
-        )
-        joined = base.alias("l").join(base.alias("r"), on="bucket").where(
-            F.col("l._id") < F.col("r._id")
-        )
-    return (
-        joined.select(
-            F.col("l._id").alias(f"{id_col}_a"),
-            F.col("r._id").alias(f"{id_col}_b"),
-            F.expr(_cos("l._v", "r._v", cosine_dim)).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
-
-
 # --------------------------------------------------------------------------
 # Vectorized (Arrow + numpy) scale path
 # --------------------------------------------------------------------------
-# The fold-based dot product above is JVM-side but interpreted (Spark's
+# The fold-based dot product (``_cos``) is JVM-side but interpreted (Spark's
 # higher-order functions don't codegen).  For the brute-force scan the
 # winning design at scale is: broadcast the small side as a dense float64
 # matrix, stream the corpus through ``mapInPandas`` in Arrow batches, and
@@ -501,12 +382,12 @@ def embedding_near_dup_pairs_vectorized(
 ) -> DataFrame:
     """All-pairs exact near-dup scan, vectorized.
 
-    Bit-identical to ``embedding_near_dup_pairs(exact=True)`` but ~10x
-    faster: the corpus matrix is collected once and broadcast; each Arrow
-    batch scores (batch x corpus) in numpy and keeps ``id_a < id_b`` pairs
+    Cosines are bit-identical to the DuckDB oracle's left-to-right fold:
+    the corpus matrix is collected once and broadcast; each Arrow batch
+    scores (batch x corpus) in numpy and keeps ``id_a < id_b`` pairs
     at/above threshold.  All-pairs is inherently the SMALL-corpus exact
     path (the broadcast matrix must fit an executor — ~5 GB at 10M x 64);
-    beyond that use the LSH-bucketed variant.
+    :func:`embedding_near_dup_pairs` gates it on the row count.
     """
     import numpy as np
 
@@ -544,33 +425,36 @@ def embedding_near_dup_pairs_vectorized(
     )
 
 
-def embedding_near_dup_pairs_auto(
+def embedding_near_dup_pairs(
     df: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
     max_exact_rows: int = 100_000,
-    n_planes: int = 6,
-    dim: int = 64,
 ) -> DataFrame:
-    """Size-gated near-dup pairs: the exact all-pairs vectorized scan
-    below ``max_exact_rows`` (it collects + broadcasts the corpus matrix
-    — only valid when that fits an executor), the BANDED LSH variant
-    above it (:func:`embedding_near_dup_pairs_banded` — no driver
-    collect, band-bucketed join with a mega-bucket cap; a high-recall
-    approximation by construction, every emitted pair exact-verified).
+    """Vector pairs with cosine >= ``threshold`` (embedding-space
+    near-dups): ``({id_col}_a, {id_col}_b, cosine)`` with ``a < b``.
 
-    The gate is one ``count()`` over the pruned (id) projection — cheap
-    relative to either scan.  The exact path is the oracle twin; the
-    driver's correctness gate runs at small sf where the exact path is
-    always taken.  (``n_planes``/``dim`` are retained for callers of the
-    legacy single-signature variant; the scale path uses the banded
-    defaults — tune via :func:`embedding_near_dup_pairs_banded`
-    directly.)
+    Size-gated on one ``count()`` of the id projection: at or below
+    ``max_exact_rows`` the exact all-pairs scan
+    (:func:`embedding_near_dup_pairs_vectorized`, which collects and
+    broadcasts the corpus matrix — the oracle twin); above it banded LSH
+    at its defaults (:func:`embedding_near_dup_pairs_banded`: no driver
+    collect, high recall, every emitted pair exact-verified; call it
+    directly to tune).  Both paths carry ids as ``long``, so a
+    non-integral ``id_col`` raises ``TypeError`` up front.
     """
     import math
 
+    from pyspark.sql.types import IntegralType
+
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"embedding_near_dup_pairs: id column {id_col!r} must be an "
+            f"integral type, got {id_type.simpleString()}"
+        )
     n = df.select(id_col).count()
     if n <= max_exact_rows:
         # size the Arrow fan-out to the data: the exact path is bounded
@@ -594,13 +478,13 @@ def assign_cells_vectorized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized IVF assignment — bit-identical to :func:`assign_cells`
-    (same sequential fold → same cosine doubles → same argmax) at numpy
-    speed.  ``centroids`` is a DataFrame (collected — small by
+    """IVF assignment: each vector → its nearest centroid by cosine,
+    appended as ``centroid_id``; the cosines replay ``portable.dot``'s
+    sequential fold.  ``centroids`` is a DataFrame (collected — small by
     contract) or an already-driver-side ``[(id, [floats]), ...]`` list
     (the k-means loop holds one; passing it straight through skips a
     createDataFrame+collect round-trip per iteration).  Ties pick the
-    smallest centroid id, matching the window's ``ORDER BY cosine DESC,
+    smallest centroid id, matching the oracle's ``ORDER BY cosine DESC,
     centroid_id ASC``."""
     import numpy as np
 

@@ -1,13 +1,13 @@
 """Text-analysis operators: language ID, quality scoring, token counting,
 fingerprinting (north-star LLM-pipeline components, BASELINE.json).
 
-Two backends, bit-identical to the DuckDB oracles and to each other:
-``with_*`` wrap the ``functions.portable`` Catalyst expressions;
+Bit-identical to the DuckDB oracles.  ``with_*`` add one column each
+from the ``functions.portable`` Catalyst expressions;
 ``profile_vectorized`` computes lang ID + quality + token count from ONE
-tokenization per document in a single Arrow pass (the SQL chain
-re-traverses the token array per stopword list and per metric — HOFs
-don't codegen).  All scan-parallel with no shuffle: one pass over the
-corpus at any scale.
+tokenization per document in a single Arrow pass (chained ``with_*``
+columns re-traverse the token array per stopword list and per metric —
+HOFs don't codegen).  All scan-parallel with no shuffle: one pass over
+the corpus at any scale.
 """
 
 from __future__ import annotations
@@ -124,15 +124,6 @@ def weighted_quality_by_group(
         _wmean_ppm(F.col("quality_ppm"), F.col(weight_col)).alias("wq_ppm"),
         _n_docs(F.col("quality_ppm")).alias("n_docs"),
     )
-
-
-def text_profile(df: DataFrame, text_col: str) -> DataFrame:
-    """All text-analysis columns in one scan, tokenizing once."""
-    out = _with_tokens(df, text_col)
-    out = with_lang_id(out, text_col)
-    out = with_quality_score(out, text_col)
-    out = with_token_counts(out, text_col)
-    return with_fingerprint(out, text_col).drop("_tokens")
 
 
 def profile_vectorized(

@@ -45,7 +45,7 @@ class MediaDedupPipeline(Model):
         )
         pairs = embedding_near_dup_pairs(
             feats, id_col="media_id", vec_col="features",
-            threshold=self.near_dup_threshold, exact=True,
+            threshold=self.near_dup_threshold,
         )
         dropped = pairs.select(F.col("media_id_b").alias("media_id")).distinct()
         keep = feats.join(dropped, on="media_id", how="left_anti")

@@ -1,6 +1,7 @@
 """Operator unit tests with hand-computable golden expectations."""
 
 import datetime
+import math
 
 from pyspark.sql import functions as F
 
@@ -9,6 +10,19 @@ from ayeaye_spark.operators import dedup, multimodal, relational, similarity
 
 def ts(s):
     return datetime.datetime.fromisoformat(s)
+
+
+def _fold_cos(a, b):
+    """Cosine in the oracle's fold order: each sum starts at +0.0 and
+    adds one component product at a time, left to right."""
+    dot = n1 = n2 = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    for x in a:
+        n1 += x * x
+    for y in b:
+        n2 += y * y
+    return dot / (math.sqrt(n1) * math.sqrt(n2))
 
 
 class TestAsofJoin:
@@ -271,16 +285,6 @@ class TestSimilarity:
                 for i in range(d)
             ]
 
-        def fold_cos(a, b):
-            dot = n1 = n2 = 0.0
-            for x, y in zip(a, b):
-                dot += x * y
-            for x in a:
-                n1 += x * x
-            for y in b:
-                n2 += y * y
-            return dot / (math.sqrt(n1) * math.sqrt(n2))
-
         codes = {i: code(v) for i, v in vecs.items()}
         expect = []
         for q in range(3):
@@ -290,7 +294,7 @@ class TestSimilarity:
                 key=lambda t: (-t[0], t[1]),
             )[:9]
             rer = sorted(
-                ((fold_cos(vecs[q], vecs[c]), adot, c) for adot, c in cand),
+                ((_fold_cos(vecs[q], vecs[c]), adot, c) for adot, c in cand),
                 key=lambda t: (-t[0], t[2]),
             )[:3]
             for rk, (cos, adot, c) in enumerate(rer, 1):
@@ -312,19 +316,28 @@ class TestSimilarity:
         assert all(r["neighbor_label"] != r["query_label"] for r in out)
 
     def test_near_dup_pairs_exact(self, spark):
+        import pytest
+
         rows = [(0, [1.0, 0.0]), (1, [1.0, 0.001]), (2, [0.0, 1.0])]
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-        pairs = similarity.embedding_near_dup_pairs(df, threshold=0.99, exact=True,
-                                                    dim=2).collect()
+        pairs = similarity.embedding_near_dup_pairs(df, threshold=0.99).collect()
         assert [(p["vec_id_a"], p["vec_id_b"]) for p in pairs] == [(0, 1)]
+
+        # both paths carry ids as long: a string id fails up front, from
+        # the schema, not inside a Python worker
+        named = spark.createDataFrame(
+            [(str(i), v) for i, v in rows], ["vec_id", "embedding"]
+        )
+        with pytest.raises(TypeError, match="integral"):
+            similarity.embedding_near_dup_pairs(named, threshold=0.99)
 
     def test_near_dup_auto_gates_driver_collect(self, spark, monkeypatch):
         rows = [(i, [1.0, 0.0]) for i in range(10)] + [(100, [0.0, 1.0])]
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
 
         # below the gate: exact vectorized path, full pair set
-        small = similarity.embedding_near_dup_pairs_auto(
-            df, threshold=0.99, max_exact_rows=100, dim=2
+        small = similarity.embedding_near_dup_pairs(
+            df, threshold=0.99, max_exact_rows=100
         ).collect()
         assert len(small) == 45  # all pairs among the 10 identical vectors
 
@@ -333,10 +346,10 @@ class TestSimilarity:
             raise AssertionError("exact path collected corpus above the gate")
 
         monkeypatch.setattr(similarity, "embedding_near_dup_pairs_vectorized", boom)
-        big = similarity.embedding_near_dup_pairs_auto(
-            df, threshold=0.99, max_exact_rows=5, n_planes=2, dim=2
+        big = similarity.embedding_near_dup_pairs(
+            df, threshold=0.99, max_exact_rows=5
         ).collect()
-        # LSH prefilter keeps high recall on identical vectors
+        # banded LSH: identical vectors collide in every band
         assert len(big) == 45
 
     def test_vectorized_topk_bit_identical(self, spark):
@@ -352,31 +365,41 @@ class TestSimilarity:
         assert hof == vec  # exact, cosine doubles included
 
     def test_vectorized_near_dup_bit_identical(self, spark):
+        """The numpy all-pairs scan equals a left-to-right Python fold
+        over every pair, cosine doubles included."""
         from ayeaye_spark.catalog import load
         from tests.conftest import SF_SMALL
 
         emb = load(spark, SF_SMALL, "embeddings")
-        slow = sorted(map(tuple, similarity.embedding_near_dup_pairs(
-            emb, threshold=0.4, exact=True).collect()))
+        vecs = sorted(tuple(r) for r in emb.select("vec_id", "embedding").collect())
+        expect = []
+        for i, (a, va) in enumerate(vecs):
+            for b, vb in vecs[i + 1:]:
+                cos = _fold_cos(va, vb)
+                if cos >= 0.4:
+                    expect.append((a, b, cos))
         fast = sorted(map(tuple, similarity.embedding_near_dup_pairs_vectorized(
             emb, threshold=0.4).collect()))
-        assert slow == fast and len(fast) > 0
+        assert fast == expect and len(fast) > 0
 
     def test_vectorized_assign_cells_bit_identical(self, spark):
+        """Each vector's cell is the Python-fold cosine argmax over the
+        centroids; a tie goes to the smallest centroid id."""
         from ayeaye_spark.catalog import load
         from tests.conftest import SF_SMALL
 
         emb = load(spark, SF_SMALL, "embeddings")
         centroids = emb.where(F.col("vec_id") % 50 == 0)
-        hof = sorted(
-            (r["vec_id"], r["centroid_id"])
-            for r in similarity.assign_cells(emb, centroids).collect()
+        cents = centroids.select("vec_id", "embedding").collect()
+        ref = sorted(
+            (vid, min(cents, key=lambda c: (-_fold_cos(v, c[1]), c[0]))[0])
+            for vid, v in emb.select("vec_id", "embedding").collect()
         )
         vec = sorted(
             (r["vec_id"], r["centroid_id"])
             for r in similarity.assign_cells_vectorized(emb, centroids).collect()
         )
-        assert hof == vec
+        assert ref == vec
 
     def test_vectorized_lsh_bucket_bit_identical(self, spark):
         from ayeaye_spark.catalog import load
@@ -1495,7 +1518,7 @@ class TestRealImageFeatures:
         assert feats.count() == 5  # wav routed out
         pairs = embedding_near_dup_pairs(
             feats, id_col="media_id", vec_col="features",
-            threshold=0.999, exact=True,
+            threshold=0.999,
         )
         names = {
             tuple(sorted((a.rsplit("/", 1)[-1], b.rsplit("/", 1)[-1])))
@@ -8141,6 +8164,19 @@ class TestKCore:
         edges = spark.createDataFrame([(1, 2)], ["a", "b"])
         with pytest.raises(ValueError, match="k must be"):
             k_core(edges, "a", "b", k=0)
+
+    def test_round_cap_raises(self, spark):
+        """A path peels one layer from each end per round: 20 vertices
+        need 10 peeling rounds, so a cap of 3 must raise instead of
+        returning a superset of the (empty) 2-core."""
+        import pytest
+
+        from ayeaye_spark.operators.graph import k_core
+
+        edges = spark.createDataFrame([(i, i + 1) for i in range(19)], ["a", "b"])
+        with pytest.raises(RuntimeError, match="max_rounds=3"):
+            k_core(edges, "a", "b", k=2, max_rounds=3)
+        assert k_core(edges, "a", "b", k=2).collect() == []
 
 
 class TestTemperatureMixture:

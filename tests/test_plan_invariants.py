@@ -22,8 +22,14 @@ Every batch query in the catalog must satisfy, at ANY scale:
 These are the repo-wide versions of the per-query assertions in
 ``test_scale_plans.py`` — a new catalog entry cannot silently introduce
 either shape.
+
+A source-level surface guard rides along: every public top-level
+function in ``ayeaye_spark/operators/`` must be referenced somewhere in
+the repo outside its own ``def``, so an uncalled twin cannot linger.
 """
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -106,3 +112,42 @@ def test_negative_fixture_naive_global_window_is_caught(spark):
         "dec", F.ntile(10).over(Window.orderBy("value"))
     )
     assert single_partition_violations(_plan(masked))
+
+
+_REPO = pathlib.Path(__file__).resolve().parent.parent
+_OPERATORS = _REPO / "ayeaye_spark" / "operators"
+
+
+def _referenced_names(node) -> set[str]:
+    """Names ``node`` uses as a ``Name``, an ``Attribute`` or an import."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_every_public_operator_is_referenced():
+    """An operator nothing calls is a twin that should have been
+    deleted.  Walks the AST of every ``.py`` file in the repo; a
+    function's references inside its own ``def`` do not count."""
+    defined, used = {}, set()
+    for path in sorted(_REPO.rglob("*.py")):
+        rel = path.relative_to(_REPO)
+        if any(part.startswith(".") for part in rel.parts):
+            continue
+        tree = ast.parse(path.read_text(), str(rel))
+        in_operators = path.parent == _OPERATORS
+        for top in tree.body:
+            names = _referenced_names(top)
+            if in_operators and isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names.discard(top.name)
+                if not top.name.startswith("_"):
+                    defined[top.name] = str(rel)
+            used |= names
+    unused = sorted(f"{path}::{name}" for name, path in defined.items() if name not in used)
+    assert not unused, f"public operators referenced nowhere: {unused}"
