@@ -2594,14 +2594,35 @@ def dedup_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# dimension of the generated embedding vectors
+EMB_DIM = 64
+
+
+def _duck_embedding_pairs_cte() -> str:
+    """DuckDB ``pairs`` CTE: every embedding pair (a < b) with its cosine,
+    bit-identical to ``P.cosine``'s fold.  Each row's norm is computed
+    once, not once per pair, and the pair dot is unrolled over the fixed
+    dimension: SQL ``+`` is left-associative, so the sum keeps the fold's
+    order (sf0.1, 2M pairs, 4 cores: 179 s with the fold, 2.8 s unrolled)."""
+    dot = P.dot_unrolled("a.v", "b.v", EMB_DIM, DUCK)
+    return f"""
+    vecs AS (
+      SELECT vec_id, label, v, sqrt({P.dot('v', 'v', DUCK)}) AS nrm
+      FROM (SELECT vec_id, label, {P.cast_double_array('embedding', DUCK)} AS v
+            FROM embeddings)
+    ),
+    pairs AS (
+      SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, a.label AS la,
+             b.label AS lb, {dot} / (a.nrm * b.nrm) AS cosine
+      FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
+    )"""
+
+
 @query(
     "emb_near_dup_pairs",
     oracle=f"""
-    SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-           {P.cosine(P.cast_double_array('a.embedding', DUCK), P.cast_double_array('b.embedding', DUCK), DUCK)}
-             AS cosine
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE {P.cosine(P.cast_double_array('a.embedding', DUCK), P.cast_double_array('b.embedding', DUCK), DUCK)} >= 0.4
+    WITH {_duck_embedding_pairs_cte()}
+    SELECT vec_id_a, vec_id_b, cosine FROM pairs WHERE cosine >= 0.4
     """,
 )
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3050,16 +3071,12 @@ def docs_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "emb_label_agreement",
     oracle=f"""
-    WITH pairs AS (
-      SELECT a.label AS la, b.label AS lb
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE {P.cosine(P.cast_double_array('a.embedding', DUCK), P.cast_double_array('b.embedding', DUCK), DUCK)} >= 0.4
-    )
+    WITH {_duck_embedding_pairs_cte()}
     SELECT COUNT(*) AS n_pairs,
            CAST(SUM(CASE WHEN la = lb THEN 1 ELSE 0 END) AS BIGINT) AS same_label_pairs,
            {P.int_div("CAST(SUM(CASE WHEN la = lb THEN 1 ELSE 0 END) AS BIGINT) * 1000000", "COUNT(*)", DUCK)}
              AS agreement_ppm
-    FROM pairs
+    FROM pairs WHERE cosine >= 0.4
     """,
 )
 def emb_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,8 +4,15 @@ Centralizes the scale-aware defaults every entry point uses: AQE on
 (runtime partition coalescing + skew-join handling), Arrow for the
 pandas-UDF slow path, UTC session timezone (oracle comparability), and
 shuffle partitions sized to the local core count instead of Spark's
-default 200.  On a real cluster these remain correct starting points —
-AQE re-plans partition counts from runtime statistics.
+default 200, and a codegen cache (``CODEGEN_CACHE_MAX_ENTRIES``) large
+enough that a recurring ``ModelCollection`` pass compiles each generated
+class once per JVM instead of once per pass.  On a real cluster these
+remain correct starting points — AQE re-plans partition counts from
+runtime statistics.
+
+:func:`codegen_compiles` reads the JVM's Janino compilation count, the
+box-independent figure that shows whether that cache holds the working
+set.
 """
 
 from __future__ import annotations
@@ -38,6 +45,28 @@ CLUSTER_PROFILE_CONF = {
 }
 
 
+# Spark's codegen cache (spark.sql.codegen.cache.maxEntries), least-
+# recently-used out first, must hold a recurring pass's generated
+# classes: at Spark's default of 100 every steady etl_dag pass recompiled
+# ~320 of them (Janino, then the JIT again on the new classes), since an
+# LRU cache smaller than a cyclic working set evicts each class before
+# its reuse.  Counts and sizing: ARCHITECTURE.md, "JIT code-cache
+# sizing".  A STATIC conf, and the cache is a JVM-wide singleton sized
+# when the JVM first generates code: it holds only for the session that
+# starts the JVM — getOrCreate on an existing session
+# (applyModifiableSettings) ignores it, and so does a later session in
+# the same JVM.
+CODEGEN_CACHE_MAX_ENTRIES = 2048
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count).  Cumulative
+    across sessions of one JVM, so callers take differences."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(
     app_name: str = "ayeaye_spark",
     *,
@@ -58,6 +87,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # JIT code cache: the JVM default (240 MB) fills after compiling
         # a few hundred whole-stage-codegen classes — once full the JIT

@@ -1714,7 +1714,7 @@ def mmr_topk(
     partition heap + driver merge, never a global sort); (2) the greedy
     MMR selection is inherently sequential (each pick changes the next
     step's objective), so it runs driver-side over the BOUNDED pool —
-    k·pool dot products on ``pool`` rows, microseconds.  ``pool`` is
+    one pool×pool Gram matrix on ``pool`` rows, microseconds.  ``pool`` is
     the documented driver-size contract (default 100 rows × dim
     doubles), the same bounded-collect pattern as the k-means centroid
     state.  Ties break by ascending id (deterministic).
@@ -1770,6 +1770,10 @@ def _mmr_greedy(ids, rel, mat, *, k: int, lam: float):
     norms = np.sqrt((mat * mat).sum(axis=1))
     norms[norms == 0] = 1.0
     unit = mat / norms[:, None]
+    # the pool's Gram matrix, once: a matrix-vector product per pick
+    # (unit @ unit[best]) takes another BLAS path and can differ from
+    # it in the last bit, which breaks exact ties between candidates
+    gram = unit @ unit.T
     selected: list[int] = []
     picked_rows = []
     max_sim = np.full(len(ids), -np.inf)
@@ -1788,6 +1792,5 @@ def _mmr_greedy(ids, rel, mat, *, k: int, lam: float):
             (rank, ids[best], float(rel[best]), float(score[best]))
         )
         selected.append(best)
-        sim_to_new = unit @ unit[best]
-        max_sim = np.maximum(max_sim, sim_to_new)
+        max_sim = np.maximum(max_sim, gram[:, best])
     return picked_rows

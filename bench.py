@@ -39,7 +39,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 from ayeaye_spark.catalog import QUERIES  # noqa: E402
-from ayeaye_spark.core.session import get_spark  # noqa: E402
+from ayeaye_spark.core.session import codegen_compiles, get_spark  # noqa: E402
 
 # Every catalog query except the deliberately-quadratic exact variant
 # (emb_near_dup_pairs exists as the small-scale oracle twin of the LSH
@@ -115,6 +115,9 @@ def main() -> None:
     # try/except, failures reported in "errors", JSON always emitted.
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+    # Janino compilations per run: 0 on a repeat run means the codegen
+    # cache held the query's classes (core/session.py)
+    compiles: dict[str, list[int]] = {}
     errors: dict[str, str] = {}
     names = [n for n in QUERIES if n not in EXCLUDE]
     for qi, name in enumerate(names):
@@ -123,16 +126,19 @@ def main() -> None:
             gc.collect()  # drop py4j handles before the new gateway
             spark = _fresh_spark(sf_dir)
         runs: list[float] = []
+        run_compiles: list[int] = []
         # streaming drains get a third run: their first run pays
         # state-store/checkpoint setup AND single runs are noisier, so
         # min-of-2 was regularly polluted by one bad sample
         n_runs = 3 if name in STREAMING else 2
         try:
             for _ in range(n_runs):
+                c0 = codegen_compiles(spark)
                 t0 = time.monotonic()
                 df = QUERIES[name](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.monotonic() - t0)
+                run_compiles.append(codegen_compiles(spark) - c0)
             # adaptive de-noise: a min-of-2 still above 2.5s is either a
             # genuinely heavy query or two unlucky samples (GC / JIT
             # pressure mid-bench — orders_cube measured [4.8, 7.4] in
@@ -140,15 +146,18 @@ def main() -> None:
             # settles it cheaply, and for truly heavy queries it only
             # confirms the number
             if name not in STREAMING and min(runs) > 2.5:
+                c0 = codegen_compiles(spark)
                 t0 = time.monotonic()
                 QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 runs.append(time.monotonic() - t0)
+                run_compiles.append(codegen_compiles(spark) - c0)
         except Exception as exc:  # noqa: BLE001 - survive any query failure
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             continue
         samples[name] = [round(r, 3) for r in runs]
+        compiles[name] = run_compiles
         timings[name] = round(min(runs), 3)
         # release this query's DataFrame/py4j handles promptly so the
         # ContextCleaner can reap its checkpoint/broadcast blocks
@@ -173,6 +182,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "runs": samples,
+        "codegen_compiles": compiles,
         "streaming": streaming,
         "runs_per_query": 2,
         "runs_per_streaming_query": 3,

@@ -195,3 +195,43 @@ class TestClusterProfile:
                         pass
                 else:
                     spark.conf.set(k, old)
+
+
+class TestCodegenCache:
+    """The codegen cache holds the engine's working set, so a recurring
+    plan compiles its generated classes once per JVM, not once per pass."""
+
+    @pytest.mark.parametrize("profile", ["local", "cluster"])
+    def test_get_spark_sets_the_cap(self, spark, monkeypatch, profile):
+        from pyspark.sql import SparkSession
+
+        from ayeaye_spark.core.session import CODEGEN_CACHE_MAX_ENTRIES, get_spark
+
+        seen = {}
+
+        def capture(builder):
+            seen.update(builder._options)
+            return spark
+
+        monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+        try:
+            get_spark("ayeaye_codegen_cap_test", profile=profile)
+        finally:
+            spark.sparkContext.setLogLevel("ERROR")
+        assert seen["spark.sql.codegen.cache.maxEntries"] == str(CODEGEN_CACHE_MAX_ENTRIES)
+
+    def test_repeat_round_compiles_nothing(self, spark):
+        """~300 distinct projections (two generated classes each) overflow
+        Spark's default cap of 100, which recompiles every one of them on
+        the second round; under the engine's cap the second round is all
+        cache hits."""
+        from ayeaye_spark.core.session import codegen_compiles
+
+        def one_round():
+            before = codegen_compiles(spark)
+            for i in range(300):
+                spark.range(0, 4, 1, 1).selectExpr(f"id * {i} + {i}").collect()
+            return codegen_compiles(spark) - before
+
+        assert one_round() >= 300
+        assert one_round() == 0

@@ -202,6 +202,27 @@ def test_bpe_replace_encoding_equals_greedy_fold(words, n_merges):
                   allow_subnormal=False),
 )
 def test_mmr_greedy_invariants(data, qv, k, lam):
+    _check_mmr_greedy(data, qv, k, lam)
+
+
+def test_mmr_greedy_exact_tie_breaks_by_id():
+    """Rows 0 and 1 tie on the objective at exactly 0 for the second
+    pick (row 1 is the zero vector, row 0 is orthogonal to the query);
+    the smaller id must win."""
+    data = [(1.0, 1.0, 0.0), (0.0, 0.0, 0.0), (0.5, -0.5, 0.0)]
+    _check_mmr_greedy(data, (0.5, -0.5, 0.0), k=2, lam=0.5)
+
+
+def test_mmr_greedy_penalty_matches_gram_matrix():
+    """Second pick: row 2's penalty is sim(2, 1), which the Gram matrix
+    puts at exactly rel[2], so row 2 scores 0 and ties with the zero row
+    0.  A matrix-vector product put sim(2, 1) 1 ulp lower, row 2 scored
+    5.55e-17 and won over row 0."""
+    data = [(0.0, 0.0, 0.0), (-0.75, 0.5, -0.25), (-0.25, 0.5, -0.5)]
+    _check_mmr_greedy(data, data[1], k=2, lam=0.5)
+
+
+def _check_mmr_greedy(data, qv, k, lam):
     """Property-pins for the MMR core (``similarity._mmr_greedy``):
     (a) picked ids are distinct and ranks dense 1..m;
     (b) lam=1 degenerates to plain (relevance desc, id asc) ranking;
