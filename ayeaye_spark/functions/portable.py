@@ -657,15 +657,6 @@ def token_count(s: str, d: str) -> str:
     return size(tokens(s, d), d)
 
 
-def alpha_ratio(s: str, d: str) -> str:
-    """Fraction of characters that are ASCII letters or space."""
-    stripped = regexp_replace_all(s, r"[^A-Za-z ]", "", d)
-    return (
-        f"(case when length({s}) = 0 then 0.0 "
-        f"else cast(length({stripped}) as double) / length({s}) end)"
-    )
-
-
 def int_div(a: str, b: str, d: str) -> str:
     return f"({a}) div ({b})" if d == SPARK else f"({a}) // ({b})"
 

@@ -410,8 +410,11 @@ def pagerank_exact(
     Scale shape: per iteration one join of the rank frame (one row per
     node) with the edge list on ``src`` and one map-side-combined SUM
     by ``dst`` — the canonical distributed PageRank step; driver state
-    is nothing, lineage is truncated per round with ``localCheckpoint``
-    (same pattern as :func:`connected_components`).  Dangling-node mass
+    is nothing.  The rounds run as one plan: lineage is cut by a lazy
+    checkpoint (``ckpt_lazy``, local or reliable per the session's
+    checkpoint mode) after every ``_CKPT_EVERY`` = 8 rounds, never after
+    the last one, so the default 5 iterations checkpoint nothing in the
+    loop.  Dangling-node mass
     is dropped (the standard simplification), and floor-division loses
     <1 ppb per edge per round — deterministic in both engines by
     construction.

@@ -17,8 +17,9 @@ DuckDB oracle bit-for-bit.
 Scale notes (the whole point):
 
 * :func:`zvalue` is a pure column expression — no UDF, no shuffle.
-* :func:`zorder_write` is ONE range-repartition shuffle on the z-value
+* :func:`zorder_frame` is ONE range-repartition shuffle on the z-value
   (the same shuffle a plain ``sortBy`` rewrite pays) + a local sort;
+  the Parquet connector writes it as ``parquet://...;zorder_by=``;
   cluster cost is identical to linear clustering, read-side pruning is
   strictly more capable.
 * File-skipping math (:func:`files_for_box`) runs on the tiny footer
@@ -29,14 +30,13 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "zvalue",
     "zvalue_sql",
     "zorder_frame",
-    "zorder_write",
     "files_for_box",
 ]
 
@@ -55,7 +55,7 @@ def zvalue(cols: list[Column | str], *, bits: int = 10) -> Column:
     """Morton z-value: interleave the low ``bits`` bits of each column.
 
     Inputs must already be NON-NEGATIVE integers below ``2**bits``
-    (callers bucket/normalize first — see :func:`zorder_write`); values
+    (callers bucket/normalize first — see :func:`zorder_frame`); values
     outside that range are masked (``& (2**bits - 1)``) so the
     expression is total.  Bit i of dimension d lands at output bit
     ``i * n_dims + d``: nearby (x, y, ...) tuples get nearby z-values,
@@ -150,22 +150,6 @@ def zorder_frame(
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    *,
-    bits: int = 10,
-    target_files: int = 16,
-) -> None:
-    """:func:`zorder_frame` + parquet write (the OPTIMIZE ZORDER-style
-    table rewrite).  The connector surface exposes the same layout as
-    ``parquet://...;zorder_by=`` (``sources/file_formats.py``)."""
-    zorder_frame(df, cols, bits=bits, target_files=target_files).write.mode(
-        "overwrite"
-    ).parquet(path)
 
 
 def files_for_box(index: DataFrame, box: dict[str, tuple]) -> list[str]:

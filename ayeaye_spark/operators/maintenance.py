@@ -130,14 +130,13 @@ def pruned_read(
     [lo, hi] (per ``index`` from :func:`build_file_index`), then apply
     the exact predicate — manifest pruning, with the residual filter
     still pushed to the surviving footers.  Files with missing stats
-    are conservatively KEPT."""
+    are conservatively KEPT (the one-column case of
+    :func:`layout.files_for_box`)."""
     from pyspark.sql import functions as F
 
-    keep = index.where(
-        (F.col(f"{col}_min").isNull())
-        | ((F.col(f"{col}_max") >= lo) & (F.col(f"{col}_min") <= hi))
-    )
-    files = [r["file"] for r in keep.select("file").collect()]
+    from .layout import files_for_box
+
+    files = files_for_box(index, {col: (lo, hi)})
     if not files:
         return (
             spark.read.parquet(path)

@@ -1518,7 +1518,7 @@ def dhash64(content: bytes) -> int | None:
     identically); ``None`` for undecodable bytes or images smaller
     than the 9x8 grid (no meaningful blocks).  Swap in a codec-backed
     grayscale reader in production via the ``hasher=`` hook of
-    :func:`perceptual_hash_images`."""
+    :func:`image_near_dup_pairs`."""
     import numpy as np
 
     got = _pixel_gray(content) if content else None
@@ -2313,27 +2313,6 @@ def extract_features(
     return df.mapInPandas(run, schema="path string, features array<double>")
 
 
-def frame_sample_plan(
-    df: DataFrame,
-    *,
-    every_ms: int = 1000,
-    duration_col: str = "media_meta.duration_ms",
-) -> DataFrame:
-    """Video → one row per sampled frame timestamp (pure plan, no decode):
-    ``explode(sequence(0, duration, step))``.  The downstream frame decode
-    is a ``mapInPandas`` with a seek-capable decoder (stubbed here)."""
-    return df.withColumn(
-        "frame_ms",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.coalesce(F.col(duration_col), F.lit(0)),
-                F.lit(every_ms),
-            )
-        ),
-    )
-
-
 KEYFRAME_SCHEMA = "path string, frame_idx int, hamming int, frame binary"
 
 
@@ -2535,19 +2514,6 @@ def media_fingerprints(
     return df.mapInPandas(run, schema="path string, phash long")
 
 
-def perceptual_hash_images(
-    df: DataFrame,
-    *,
-    content_col: str = "content",
-    path_col: str = "path",
-    hasher: Callable[[bytes], int | None] = dhash64,
-) -> DataFrame:
-    """Image dHash fingerprints — see :func:`media_fingerprints`."""
-    return media_fingerprints(
-        df, hasher, content_col=content_col, path_col=path_col
-    )
-
-
 def image_near_dup_pairs(
     df: DataFrame,
     *,
@@ -2567,8 +2533,8 @@ def image_near_dup_pairs(
     works exactly as documented on ``dedup.simhash_near_pairs``."""
     from .dedup import hamming_near_pairs
 
-    sig = perceptual_hash_images(
-        df, content_col=content_col, path_col=path_col, hasher=hasher
+    sig = media_fingerprints(
+        df, hasher, content_col=content_col, path_col=path_col
     ).where(F.col("phash").isNotNull())
     return hamming_near_pairs(
         sig, "path", "phash",
@@ -2616,34 +2582,6 @@ def audio_fingerprint64(content: bytes) -> int | None:
         for j in range(8):
             v = (v << 1) | int(e[j] > med)
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def audio_near_dup_pairs(
-    df: DataFrame,
-    *,
-    content_col: str = "content",
-    path_col: str = "path",
-    max_hamming: int = 5,
-    bands: int = 8,
-    hasher: Callable[[bytes], int | None] = audio_fingerprint64,
-) -> DataFrame:
-    """Audio near-duplicate pairs — the audio twin of
-    :func:`image_near_dup_pairs`: spectral fingerprints from
-    :func:`audio_fingerprint64`, candidates from the same lossless
-    pigeonhole banding (``dedup.hamming_near_pairs``).  Default 8 bands
-    = 8-bit keys: a SMALL keyspace (256/band), fine for collection-
-    scale audio sets; drop ``max_hamming`` below 4 and use ``bands=4``
-    (16-bit keys) when corpus-scale occupancy bites, exactly per the
-    banding scale notes on ``dedup.simhash_near_pairs``."""
-    from .dedup import hamming_near_pairs
-
-    sig = media_fingerprints(
-        df, hasher, content_col=content_col, path_col=path_col
-    ).where(F.col("phash").isNotNull())
-    return hamming_near_pairs(
-        sig, "path", "phash",
-        fp_bits=64, max_hamming=max_hamming, bands=bands,
-    )
 
 
 def write_avi(frames, fps: int = 10) -> bytes:
@@ -3054,18 +2992,3 @@ def extract_exif(
     return df.mapInPandas(run, schema=EXIF_SCHEMA)
 
 
-def exif_privacy_audit(df: DataFrame, **kwargs) -> DataFrame:
-    """One-row corpus privacy audit over :func:`extract_exif`: images
-    total, with parseable Exif, with GPS positions (the rows a scrub
-    must handle), and with camera identity (make or model)."""
-    exif = extract_exif(df, **kwargs)
-    return exif.agg(
-        F.count(F.lit(1)).cast("long").alias("n_images"),
-        F.sum((F.col("make").isNotNull() | F.col("model").isNotNull()
-               | F.col("datetime_original").isNotNull()
-               | F.col("orientation").isNotNull()).cast("int"))
-        .cast("long").alias("n_with_exif"),
-        F.sum(F.col("has_gps").cast("int")).cast("long").alias("n_with_gps"),
-        F.sum((F.col("make").isNotNull() | F.col("model").isNotNull())
-              .cast("int")).cast("long").alias("n_with_camera_id"),
-    )

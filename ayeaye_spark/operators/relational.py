@@ -8,8 +8,10 @@ Every helper is shuffle-aware:
   poisonous-animals pattern, ``examples/poisonous_animals.py:16-25``).
 * :func:`date_span_expand` — per-row date-interval explosion
   (favourite-colours, ``examples/favourite_colours.py:63-87``).
-* :func:`top_k_per_group` — deterministic window top-k (global top-1 =
-  the NOAA hottest/coldest pattern, ``examples/noaa_climatology.py:62-84``).
+* :func:`top_k_per_group_scalable` — deterministic top-k per group
+  (global top-1 = the NOAA hottest/coldest pattern,
+  ``examples/noaa_climatology.py:62-84``) as a partial + merge window,
+  so no task sorts a whole group.
 * :func:`asof_join` — scalable as-of join via union + window
   carry-forward: ONE shuffle on (keys, ts) instead of a range join's
   quadratic bucket blowup; the standard streaming-enrichment plan.
@@ -60,32 +62,6 @@ def date_span_expand(
     )
 
 
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    k: int,
-    *,
-    descending: bool = True,
-    tiebreak_cols: list[str] | None = None,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Deterministic top-k: explicit tiebreak columns make the result
-    well-defined (and oracle-stable) even with duplicate order values.
-
-    SCALE CAVEAT: the window puts each group (or, with ``group_cols=[]``,
-    the WHOLE frame) into one task — fine when the input is an already-
-    bounded aggregate; for low-cardinality groups over big frames use
-    :func:`top_k_per_group_scalable` (partial+merge, same result)."""
-    ordering = [F.desc(order_col) if descending else F.asc(order_col)]
-    ordering += [F.asc(c) for c in (tiebreak_cols or [])]
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy(*ordering)
-    else:
-        w = Window.partitionBy(F.lit(1)).orderBy(*ordering)
-    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
-
-
 def top_k_per_group_scalable(
     df: DataFrame,
     group_cols: list[str],
@@ -109,8 +85,7 @@ def top_k_per_group_scalable(
        window now runs on a bounded, tiny frame.
 
     The tiebreak columns must make the ordering total, which also makes
-    the result independent of the physical partitioning.  Same output
-    as :func:`top_k_per_group`.
+    the result independent of the physical partitioning.
     """
     ordering = [F.desc(order_col) if descending else F.asc(order_col)]
     ordering += [F.asc(c) for c in (tiebreak_cols or [])]
@@ -647,52 +622,6 @@ def sessionize(
     return df.withColumn("_new_session", is_new).withColumn(
         session_col, F.sum("_new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("_new_session")
-
-
-def grouped_stats_pandas(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-) -> DataFrame:
-    """Per-group count / exact sum / min / max via ``applyInPandas``
-    (grouped-map: whole group as one pandas frame in, one row out).
-
-    The grouped-map modality exists for operators that genuinely need
-    the full group in memory (model scoring, per-group fitting); for
-    plain aggregates the groupBy twin is strictly better (map-side
-    combine, no group materialization).  Null values are skipped like
-    the SQL aggregates (count still counts the rows); count/min/max are
-    test-pinned equal to the groupBy twin.  The sum accumulates
-    sequentially in VALUE-SORTED order — partitioning-independent
-    (test-pinned across repartitionings), but deliberately NOT the same
-    float fold as ``F.sum`` (whose order follows partition layout): do
-    not swap them inside an exact-equality oracle path.
-    """
-    import pandas as pd
-
-    out_fields = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    schema = f"{out_fields}, n_rows long, total double, vmin double, vmax double"
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].dropna().sort_values(kind="mergesort")
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        if len(vals) == 0:  # all-null group: SQL aggregates yield null
-            row.update(n_rows=[len(pdf)], total=[None], vmin=[None], vmax=[None])
-            return pd.DataFrame(row)
-        # sequential left-fold in sorted order — deterministic regardless
-        # of partitioning (never numpy pairwise sum)
-        total = 0.0
-        for v in vals:
-            total += float(v)
-        row.update(
-            n_rows=[len(pdf)], total=[total],
-            vmin=[float(vals.iloc[0])], vmax=[float(vals.iloc[-1])],
-        )
-        return pd.DataFrame(row)
-
-    return df.groupBy(*group_cols).applyInPandas(stats, schema)
 
 
 def exact_group_quantiles(

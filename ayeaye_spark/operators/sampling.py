@@ -272,30 +272,6 @@ def pack_sequences(
     return out.drop("_cum") if not keep_cum else out
 
 
-def stratified_sample(
-    df: DataFrame,
-    group_cols: list[str],
-    id_col: str,
-    *,
-    k: int,
-) -> DataFrame:
-    """Deterministic k-per-group sample: within each group, rows ranked
-    by (hash bucket, id) — the id-keyed LCG bucket, so selection is
-    engine- and partitioning-independent and stable across runs — and
-    the first ``k`` kept (eval-set construction, per-language probes).
-
-    One hash-shuffled window per group; no ``rand()``, no driver state.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.expr(bucket_expr(id_col)), F.col(id_col)
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
 def seeded_shuffle(
     df: DataFrame,
     id_col: str,

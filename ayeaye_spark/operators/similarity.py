@@ -1764,11 +1764,18 @@ def _mmr_greedy(ids, rel, mat, *, k: int, lam: float):
     :func:`mmr_topk`, module-level so its invariants are property-
     testable without a SparkSession).  ``ids`` parallel to ``rel``
     (cosine to query) and ``mat`` (row vectors).  Returns
-    ``[(rank, id, relevance, mmr_score), ...]``."""
+    ``[(rank, id, relevance, mmr_score), ...]``.
+
+    A row whose squared norm is below the smallest normal double (every
+    component under ~1e-154) counts as a zero vector: its square sum has
+    lost its precision, so dividing by its root would give a "unit"
+    vector whose cosines can exceed 1.  Left unscaled, its similarities
+    are ~0 and it carries no diversity penalty."""
     import numpy as np
 
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
+    sq = (mat * mat).sum(axis=1)
+    norms = np.sqrt(sq)
+    norms[sq < np.finfo(np.float64).tiny] = 1.0
     unit = mat / norms[:, None]
     # the pool's Gram matrix, once: a matrix-vector product per pick
     # (unit @ unit[best]) takes another BLAS path and can differ from

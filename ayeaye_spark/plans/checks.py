@@ -33,19 +33,6 @@ def assert_columns(df: DataFrame, required: list[str] | None = None,
         raise CheckFailed(f"expected columns {expected} != actual {df.columns}")
 
 
-def assert_non_empty(df: DataFrame) -> None:
-    if df.isEmpty():
-        raise CheckFailed("DataFrame is empty")
-
-
-def assert_no_rows(df: DataFrame, message: str = "unexpected rows") -> None:
-    """Assert a predicate-violation DataFrame is empty — the generic
-    post-build data-quality gate."""
-    if not df.isEmpty():
-        sample = [r.asDict() for r in df.take(3)]
-        raise CheckFailed(f"{message}; examples: {sample}")
-
-
 def assert_single_value(df: DataFrame, col: str) -> Any:
     """Exactly one distinct value in ``col`` (the single-year precondition,
     ``favourite_colours.py:41-61``); returns it."""
@@ -89,7 +76,7 @@ def expectation_report(df: DataFrame, rules: dict[str, str]) -> DataFrame:
     aggregate (map-side combined — one scan however many rules), then a
     tiny ``stack`` to long format.  Uniqueness and other set-level
     expectations are separate queries by nature (they aggregate before
-    judging); compose them with :func:`assert_no_rows`.
+    judging): a query whose rows are the violations.
     """
     from pyspark.sql import functions as F
 

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import AccessMode, ConnectorError, DataConnector, spark_path
+from .base import ConnectorError, DataConnector, spark_path
 
 RECORD_SCHEMA = (
     "archive_path STRING, warc_type STRING, record_id STRING, "

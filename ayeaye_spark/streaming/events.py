@@ -7,8 +7,6 @@ can declare them like any other transform:
 
 * :func:`windowed_counts` — watermarked tumbling/sliding window aggregate.
 * :func:`session_aggregate` — ``session_window`` gap sessions.
-* :func:`stream_from_parquet` — file-source stream over a parquet dir
-  (how tests and local smoke runs drive streaming deterministically).
 * :func:`run_to_memory` — drain a bounded stream into an in-memory table
   synchronously (test/debug harness).
 
@@ -21,14 +19,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stream_from_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def windowed_counts(
@@ -183,77 +175,6 @@ def stateful_running_totals(
 
     return events.groupBy(key_col).applyInPandasWithState(
         update_totals, output_schema, state_schema, "update", "NoTimeout"
-    )
-
-
-def stateful_running_totals_tws(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    :func:`stateful_running_totals` — the NEW arbitrary-stateful API
-    (StatefulProcessor with named typed state variables, optional
-    timers/TTL) that supersedes ``applyInPandasWithState``.  Requires
-    the RocksDB state store (:func:`use_rocksdb_state`) AND the
-    ``protobuf`` package (the state-server protocol) — absent in this
-    container, so the streaming path raises a loud
-    MissingDependencyError at call time; the legacy twin carries the
-    tested streaming surface, and the batch degradation here works
-    everywhere.
-    """
-    if not events.isStreaming:
-        return events.groupBy(key_col).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col(value_col).cast("double")).alias("total_value"),
-        )
-
-    try:  # the state-server protocol is protobuf-based
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        from ..sources.base import MissingDependencyError
-
-        raise MissingDependencyError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pip install protobuf) — use stateful_running_totals (the "
-            "applyInPandasWithState twin) in this environment"
-        ) from exc
-
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import StructType
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    output_schema = StructType.fromDDL(
-        f"{key_col} {key_type}, n_events long, total_value double"
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802 - API name
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

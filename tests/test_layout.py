@@ -58,9 +58,9 @@ class TestZorderWrite:
         (orders.repartitionByRange(16, "o_orderdate")
                .sortWithinPartitions("o_orderdate")
                .write.parquet(lin))
-        layout.zorder_write(
-            orders, zo, ["o_custkey", "o_orderdate"], target_files=16
-        )
+        layout.zorder_frame(
+            orders, ["o_custkey", "o_orderdate"], target_files=16
+        ).write.parquet(zo)
         assert spark.read.parquet(zo).count() == n
         assert sorted(spark.read.parquet(zo).columns) == sorted(orders.columns)
 
@@ -121,5 +121,7 @@ class TestZorderWrite:
             F.lit(7).alias("k"),
             F.date_add(F.lit("2024-01-01"), (F.col("id") % 365).cast("int")).alias("d"),
         )
-        layout.zorder_write(df, f"{tmp_path}/t", ["k", "d"], target_files=4)
+        layout.zorder_frame(df, ["k", "d"], target_files=4).write.parquet(
+            f"{tmp_path}/t"
+        )
         assert spark.read.parquet(f"{tmp_path}/t").count() == 500

@@ -91,7 +91,9 @@ class TestRelationalHelpers:
         df = spark.createDataFrame(
             [("g", 5, 1), ("g", 5, 2), ("g", 3, 3)], ["k", "score", "id"]
         )
-        rows = relational.top_k_per_group(df, ["k"], "score", 2, tiebreak_cols=["id"]).collect()
+        rows = relational.top_k_per_group_scalable(
+            df, ["k"], "score", 2, tiebreak_cols=["id"]
+        ).collect()
         assert [(r["id"], r["rank"]) for r in sorted(rows, key=lambda r: r["rank"])] == [
             (1, 1), (2, 2)
         ]
@@ -441,14 +443,6 @@ class TestMultimodal:
         assert all(r["width"] > 0 for r in decoded)
         feats = multimodal.extract_features(df, dim=4).collect()
         assert all(len(r["features"]) == 4 for r in feats)
-
-    def test_frame_sample_plan(self, spark):
-        df = spark.createDataFrame([("v1", 3500)], ["path", "dur"])
-        df = df.withColumn(
-            "media_meta", F.struct(F.col("dur").cast("long").alias("duration_ms"))
-        )
-        frames = multimodal.frame_sample_plan(df, every_ms=1000)
-        assert frames.count() == 4  # 0,1000,2000,3000
 
 
 class TestJaccardFrequencyPruning:
@@ -818,12 +812,23 @@ class TestBoilerplateAndStratified:
         assert got[3] == (4, 0, 0)
 
     def test_stratified_sample_deterministic(self, spark):
+        """``docs_stratified_sample``'s selection: rank within each group
+        by (hash bucket, id), keep the first k."""
+        from pyspark.sql import Window
+
         from ayeaye_spark.operators import sampling
 
         rows = [(i, "g%d" % (i % 3)) for i in range(300)]
         df = spark.createDataFrame(rows, ["id", "grp"])
-        a = sampling.stratified_sample(df, ["grp"], "id", k=5)
-        b = sampling.stratified_sample(df.repartition(13), ["grp"], "id", k=5)
+        w = Window.partitionBy("grp").orderBy(
+            F.expr(sampling.bucket_expr("id")), F.col("id")
+        )
+
+        def sample(frame):
+            return frame.withColumn("rk", F.row_number().over(w)).where("rk <= 5")
+
+        a = sample(df)
+        b = sample(df.repartition(13))
         sa = sorted((r["grp"], r["id"]) for r in a.collect())
         sb = sorted((r["grp"], r["id"]) for r in b.collect())
         assert sa == sb                     # partitioning-independent
@@ -1809,54 +1814,6 @@ class TestAutoShingleDfValidation:
         df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
         with _pytest.raises(ValueError, match="auto"):
             dedup.ngram_jaccard_pairs(df, "doc_id", "text", max_shingle_df="Auto")
-
-
-class TestGroupedMapPandas:
-    def test_matches_groupby_aggregate(self, spark):
-        from ayeaye_spark.catalog import load
-        from ayeaye_spark.operators import relational
-
-        events = load(spark, "/root/testdata/sf0.001", "events")
-        got = {
-            r["event_type"]: (r["n_rows"], r["vmin"], r["vmax"])
-            for r in relational.grouped_stats_pandas(
-                events, ["event_type"], "value"
-            ).collect()
-        }
-        want = {
-            r["event_type"]: (r["n"], r["lo"], r["hi"])
-            for r in events.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("value").alias("lo"),
-                F.max("value").alias("hi"),
-            ).collect()
-        }
-        assert got == want
-        # the sequential sorted-order fold is partitioning-independent
-        a = relational.grouped_stats_pandas(events, ["event_type"], "value")
-        b = relational.grouped_stats_pandas(
-            events.repartition(13), ["event_type"], "value"
-        )
-        sa = {r["event_type"]: r["total"] for r in a.collect()}
-        sb = {r["event_type"]: r["total"] for r in b.collect()}
-        assert sa == sb  # bit-identical doubles
-
-
-class TestGroupedMapPandasEdgeCases:
-    def test_int_group_col_and_nulls(self, spark):
-        from ayeaye_spark.operators import relational
-
-        rows = [(7, 1.0), (7, None), (8, None), (9, 3.0), (9, 2.0)]
-        df = spark.createDataFrame(rows, ["g", "value"])
-        got = {r["g"]: (r["n_rows"], r["total"], r["vmin"], r["vmax"])
-               for r in relational.grouped_stats_pandas(df, ["g"], "value").collect()}
-        # nulls skipped like SQL aggregates; count counts rows;
-        # all-null group yields null stats; int group key round-trips
-        assert got == {
-            7: (2, 1.0, 1.0, 1.0),
-            8: (1, None, None, None),
-            9: (2, 5.0, 2.0, 3.0),
-        }
 
 
 class TestExactGroupQuantiles:
@@ -3212,12 +3169,14 @@ class TestTopKPerGroupScalable:
     def test_matches_window_form(self, spark):
         rows = [(i, f"s{i % 4}", float((i * 17) % 50)) for i in range(400)]
         df = spark.createDataFrame(rows, ["id", "seg", "price"])
-        want = sorted(
-            (r["seg"], r["id"], r["rank"])
-            for r in relational.top_k_per_group(
-                df, ["seg"], "price", 5, tiebreak_cols=["id"]
-            ).collect()
-        )
+        # reference: per group, price desc then id asc, first 5 ranked 1..5
+        ordered = sorted(rows, key=lambda r: (r[1], -r[2], r[0]))
+        want, rank = [], {}
+        for i, seg, _ in ordered:
+            rank[seg] = rank.get(seg, 0) + 1
+            if rank[seg] <= 5:
+                want.append((seg, i, rank[seg]))
+        want.sort()
         got = sorted(
             (r["seg"], r["id"], r["rank"])
             for r in relational.top_k_per_group_scalable(
@@ -4833,8 +4792,11 @@ class TestAudioNearDup:
             ("junk", bytearray(b"nope")),
         ]
         df = spark.createDataFrame(rows, "path string, content binary")
+        pairs = multimodal.image_near_dup_pairs(
+            df, hasher=multimodal.audio_fingerprint64, max_hamming=5, bands=8
+        )
         got = {(r["path_a"], r["path_b"]): r["hamming"]
-               for r in multimodal.audio_near_dup_pairs(df).collect()}
+               for r in pairs.collect()}
         assert ("a16", "a8") in got
         assert not any("c16" in p or "junk" in p for p in got)
 
@@ -8919,9 +8881,7 @@ class TestExif:
         assert parse_exif(b"") is None
 
     def test_stage_and_privacy_audit(self, spark):
-        from ayeaye_spark.operators.multimodal import (
-            exif_privacy_audit, extract_exif,
-        )
+        from ayeaye_spark.operators.multimodal import extract_exif
 
         rows = [
             ("a.jpg", _build_exif_jpeg("<")),
@@ -8936,11 +8896,11 @@ class TestExif:
         assert got["b.jpg"]["has_gps"] is True
         assert got["c.jpg"]["make"] is None and got["c.jpg"]["has_gps"] is False
         assert got["d.png"]["has_gps"] is False
-        audit = exif_privacy_audit(df).collect()[0]
-        assert audit["n_images"] == 4
-        assert audit["n_with_exif"] == 2
-        assert audit["n_with_gps"] == 2
-        assert audit["n_with_camera_id"] == 2
+        # the privacy-audit counts: GPS positions and camera identities
+        assert len(got) == 4
+        assert sum(r["has_gps"] for r in got.values()) == 2
+        assert sum(r["make"] is not None or r["model"] is not None
+                   for r in got.values()) == 2
 
 
 class TestRobotsReviewRegressions:

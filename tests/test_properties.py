@@ -222,6 +222,15 @@ def test_mmr_greedy_penalty_matches_gram_matrix():
     _check_mmr_greedy(data, data[1], k=2, lam=0.5)
 
 
+def test_mmr_greedy_underflowing_norm_is_a_zero_vector():
+    """Row 1's squared norm (3.2e-318) is subnormal, so its root is
+    9e-8 low and dividing by it gave a "unit" vector whose cosine with
+    row 0 was 1.00000009: the second pick then scored below
+    ``lam * rel - (1 - lam)``.  As a zero vector it carries no penalty."""
+    data = [(1.0, 0.0, 0.0), (1.7792251686871502e-159, 0.0, 0.0)]
+    _check_mmr_greedy(data, (0.0, 0.0, 0.0), k=2, lam=0.5)
+
+
 def _check_mmr_greedy(data, qv, k, lam):
     """Property-pins for the MMR core (``similarity._mmr_greedy``):
     (a) picked ids are distinct and ranks dense 1..m;
@@ -237,8 +246,10 @@ def _check_mmr_greedy(data, qv, k, lam):
     mat = np.array(data, dtype=np.float64)
     q = np.array(qv, dtype=np.float64)
     qn = np.linalg.norm(q) or 1.0
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    safe = np.where(norms == 0, 1.0, norms)
+    sq = (mat * mat).sum(axis=1)
+    # a squared norm below the smallest normal double is a zero vector
+    # (the kernel's documented rule; its root has lost its precision)
+    safe = np.where(sq < np.finfo(np.float64).tiny, 1.0, np.sqrt(sq))
     rel = (mat @ q) / (safe * qn)
     ids = list(range(len(data)))
     out = _mmr_greedy(ids, rel.copy(), mat.copy(), k=k, lam=lam)

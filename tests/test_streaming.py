@@ -17,6 +17,12 @@ def _events_parquet(spark, tmp_path):
     return path
 
 
+def _stream_from_parquet(spark, path):
+    """A file-source stream over a parquet dir: replays the rows as
+    micro-batches, so a streaming plan runs deterministically."""
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+
+
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):
     path = _events_parquet(spark, tmp_path)
     batch_df = spark.read.parquet(path)
@@ -25,7 +31,7 @@ def test_windowed_counts_stream_equals_batch(spark, tmp_path):
         for r in streamops.windowed_counts(batch_df, group_cols=["event_type"]).collect()
     }
 
-    stream_df = streamops.stream_from_parquet(spark, path)
+    stream_df = _stream_from_parquet(spark, path)
     assert stream_df.isStreaming
     agg = streamops.windowed_counts(stream_df, group_cols=["event_type"])
     result = streamops.run_to_memory(agg, "windowed_counts_test", output_mode="complete")
@@ -38,7 +44,7 @@ def test_windowed_counts_stream_equals_batch(spark, tmp_path):
 
 def test_session_aggregate_stream_runs(spark, tmp_path):
     path = _events_parquet(spark, tmp_path)
-    stream_df = streamops.stream_from_parquet(spark, path)
+    stream_df = _stream_from_parquet(spark, path)
     agg = streamops.session_aggregate(stream_df, gap="30 minutes", by=["user_id"])
     result = streamops.run_to_memory(agg, "session_agg_test", output_mode="complete")
     rows = result.collect()
@@ -52,7 +58,7 @@ def test_session_aggregate_stream_runs(spark, tmp_path):
 def test_stateful_stream_dedup(spark, tmp_path):
     """Streaming exact-dedup: dropDuplicates on a stream keeps state."""
     path = _events_parquet(spark, tmp_path)
-    stream_df = streamops.stream_from_parquet(spark, path)
+    stream_df = _stream_from_parquet(spark, path)
     deduped = stream_df.select("user_id").dropDuplicates(["user_id"])
     result = streamops.run_to_memory(deduped, "stream_dedup_test", output_mode="append")
     assert result.count() == spark.read.parquet(path).select("user_id").distinct().count()
@@ -68,7 +74,7 @@ def test_stateful_running_totals(spark, tmp_path):
         for r in streamops.stateful_running_totals(batch).collect()
     }
 
-    stream_df = streamops.stream_from_parquet(spark, path)
+    stream_df = _stream_from_parquet(spark, path)
     out = streamops.stateful_running_totals(stream_df)
     q = (
         out.writeStream.format("memory").queryName("stateful_totals")
@@ -137,7 +143,7 @@ def test_foreach_batch_exactly_once(spark, tmp_path):
 
     path = _events_parquet(spark, tmp_path)
     out = str(tmp_path / "sink_out")
-    stream = streamops.stream_from_parquet(spark, path)
+    stream = _stream_from_parquet(spark, path)
     sink = idempotent_parquet_sink(out)
     q = (
         stream.writeStream.foreachBatch(sink)
@@ -199,7 +205,7 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
     )
     assert expected  # non-trivial join at sf0.001
 
-    stream = streamops.stream_from_parquet(spark, path)
+    stream = _stream_from_parquet(spark, path)
     views_s = stream.where(F.col("event_type") == "view").select("user_id", "ts", "event_id")
     clicks_s = stream.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
     joined = streamops.interval_event_join(
@@ -216,7 +222,7 @@ def test_enrich_with_static_broadcasts(spark, tmp_path):
     dim = spark.createDataFrame(
         [("view", 1.0), ("click", 5.0), ("purchase", 25.0)], ["event_type", "weight"]
     )
-    stream = streamops.stream_from_parquet(spark, path)
+    stream = _stream_from_parquet(spark, path)
     enriched = streamops.enrich_with_static(stream, dim, on=["event_type"])
     result = streamops.run_to_memory(enriched, "enrich_test", output_mode="append")
     rows = result.collect()
@@ -240,7 +246,7 @@ def test_stateful_totals_string_key(spark, tmp_path):
     path = str(tmp_path / "sk")
     df.write.parquet(path)
 
-    stream_df = streamops.stream_from_parquet(spark, path)
+    stream_df = _stream_from_parquet(spark, path)
     out = streamops.stateful_running_totals(stream_df, key_col="name")
     q = (out.writeStream.format("memory").queryName("sk_totals")
          .outputMode("update").trigger(availableNow=True).start())
@@ -291,8 +297,8 @@ def test_interval_join_left_outer_stream(spark, tmp_path):
     expected = key_rows(batch)
     assert expected == {(1, 100), (2, None), (3, None)}
 
-    vs = streamops.stream_from_parquet(spark, vdir)
-    cs = streamops.stream_from_parquet(spark, cdir)
+    vs = _stream_from_parquet(spark, vdir)
+    cs = _stream_from_parquet(spark, cdir)
     joined = streamops.interval_event_join(
         vs, cs, on=["user_id"], max_delay="30 minutes",
         watermark="1 minute", how="leftOuter",
@@ -362,40 +368,6 @@ class TestRocksDBStateStore:
             else:
                 spark.conf.set(key, before)
         assert rocks == baseline
-
-
-def test_transform_with_state_gated_and_batch_twin(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas needs the protobuf package
-    (its state-server protocol), absent in this container: the
-    streaming path must raise a LOUD MissingDependencyError at call
-    time — never a mid-query crash — and the batch degradation must
-    equal the legacy applyInPandasWithState twin's batch aggregate."""
-    import pytest as _pytest
-
-    from ayeaye_spark.sources.base import MissingDependencyError
-
-    path = _events_parquet(spark, tmp_path)
-    batch = spark.read.parquet(path)
-    expected = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in streamops.stateful_running_totals(batch).collect()
-    }
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in streamops.stateful_running_totals_tws(batch).collect()
-    }
-    assert got == expected
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        _pytest.skip("protobuf present: gate not exercised here")
-    stream_df = streamops.stream_from_parquet(spark, path)
-    with _pytest.raises(MissingDependencyError, match="protobuf"):
-        streamops.stateful_running_totals_tws(stream_df)
 
 
 class TestStreamTrending:
