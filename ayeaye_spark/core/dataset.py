@@ -14,7 +14,8 @@ from __future__ import annotations
 import copy
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.base import AccessMode, DataConnector
 from ..sources.multi import MultiConnector, PlaceholderDataConnector
@@ -26,7 +27,10 @@ class DatasetHandle:
 
     The attribute a model's ``build()`` works with.  ``.df`` triggers the
     read (lazy DataFrame — Catalyst optimizes the whole composed plan);
-    ``.write(df)`` is the sink side.  Driver-side connectors (json
+    ``.write(df)`` is the sink side and reports what it wrote: the rows
+    (also kept as ``rows_written``) plus any aggregates the caller names,
+    observed on the write job itself, so a model never re-runs a frame's
+    plan just to count what it persisted.  Driver-side connectors (json
     manifests, REST) proxy ``.data`` and verbs straight through, mirroring
     the reference's standalone attribute proxy (``connect.py:295-331``).
     """
@@ -35,6 +39,8 @@ class DatasetHandle:
         self.connector = connector
         self._spark_provider = spark_provider
         self._df: DataFrame | None = None
+        #: rows of this handle's last observed write; None until one
+        self.rows_written: int | None = None
 
     @property
     def spark(self) -> SparkSession:
@@ -49,8 +55,43 @@ class DatasetHandle:
     def read(self) -> DataFrame:
         return self.df
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
-        self.connector.write(df, mode=mode)
+    def write(self, df: DataFrame, mode: str = "overwrite", **metrics: Column) -> dict | None:
+        """Write ``df``; return ``{"rows": n, **metrics}`` as observed on
+        the write job, e.g. ``write(df, total=F.sum("x"))``.
+
+        One ``Dataset.observe`` carries ``rows = count(1)`` and the named
+        aggregate columns (the shape of
+        :func:`~ayeaye_spark.core.checkpoint.materialize_observed`).  The
+        connector applies it after its layout step, at the root of the
+        write's result stage, where Spark applies each task's update
+        once.  Returns None, without waiting on the observation, when
+        the connector's write path runs no ``DataFrameWriter`` action on
+        an observed frame (csv ``;single_file``, ``arrow://``, ``wds://``,
+        the REST sinks; kafka, bigquery and elasticsearch, whose writers
+        live in their own jars, stay unobserved too).
+        """
+        if "rows" in metrics:
+            raise ValueError("'rows' is the write's own row count; name the metric otherwise")
+        self.rows_written = None
+        if not self.connector.observes_writes:
+            self.connector.write(df, mode=mode)
+            return None
+        obs = Observation()
+        applied = False
+
+        def observe(frame: DataFrame) -> DataFrame:
+            nonlocal applied
+            applied = True
+            return frame.observe(
+                obs, F.count(F.lit(1)).alias("rows"), *[v.alias(k) for k, v in metrics.items()]
+            )
+
+        self.connector.write(df, mode=mode, observe=observe)
+        if not applied:
+            return None
+        observed = obs.get
+        self.rows_written = observed["rows"]
+        return observed
 
     def sql(self, statement: str, **params: Any) -> DataFrame:
         if not hasattr(self.connector, "sql"):
@@ -67,6 +108,7 @@ class DatasetHandle:
 
     def close(self) -> None:
         self._df = None
+        self.rows_written = None
         self.connector.close_connection()
 
     def __getattr__(self, item: str) -> Any:

@@ -174,6 +174,12 @@ class Model(LoggingMixin):
         self.close_datasets()
 
         self._build()
+        # the row counts the writes observed: no Spark job of its own
+        self.stats["rows_written"] = {
+            name: handle.rows_written
+            for name, handle in self.__dict__.get("_dataset_handles", {}).items()
+            if handle.rows_written is not None
+        }
         self.close_datasets()
 
         if not self.post_build_check():

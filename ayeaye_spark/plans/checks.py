@@ -3,16 +3,16 @@
 The reference validates with user Python inside ``pre_build_check`` /
 ``post_build_check`` (e.g. the single-year precondition and conservation
 check in ``examples/favourite_colours.py:41-110``).  Spark-first, these
-become DataFrame assertions that cost at most one aggregate job — and
-where possible zero extra jobs via ``df.observe`` metrics collected
-during the build action itself.
+become DataFrame assertions that cost at most one aggregate job.  A
+count or aggregate of what ``build()`` wrote costs none: it comes back
+from ``DatasetHandle.write(df, **metrics)``, observed on the write job.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,19 +51,6 @@ def assert_conserved(
     b = out_df.agg(F.expr(out_expr).alias("v")).collect()[0]["v"]
     if a is None or b is None or abs(float(a) - float(b)) > tol:
         raise CheckFailed(f"conservation violated: {in_expr}={a} vs {out_expr}={b}")
-
-
-def observed(df: DataFrame, name: str, **metrics: Any) -> tuple[DataFrame, Observation]:
-    """Attach ``df.observe`` metrics (named counters collected for free
-    during the next action — the Spark-native version of the reference's
-    stats counters, ``model.py:49-53``).
-
-    >>> df, obs = observed(df, "build", rows=F.count(F.lit(1)))
-    >>> df.write...; obs.get["rows"]
-    """
-    obs = Observation(name)
-    exprs = [v.alias(k) for k, v in metrics.items()]
-    return df.observe(obs, *exprs), obs
 
 
 def expectation_report(df: DataFrame, rules: dict[str, str]) -> DataFrame:

@@ -57,6 +57,9 @@ class DataConnector:
     engine_types: list[str] = []
     #: connectors that only make sense driver-side (manifests, REST control)
     driver_side: bool = False
+    #: ``write`` takes ``observe=`` and applies it to the frame it hands
+    #: its ``DataFrameWriter`` (see :meth:`DatasetHandle.write`)
+    observes_writes: bool = False
 
     def __init__(
         self,
@@ -146,6 +149,16 @@ class DataConnector:
 
     def __repr__(self) -> str:
         return f"<{type(self).__name__} {self.engine_url} {self.access.name}>"
+
+
+#: ``observe=`` of an observing connector's ``write``: applied to the
+#: exact frame handed to the ``DataFrameWriter`` (after any layout step)
+Observe = Callable[[DataFrame], DataFrame]
+
+
+def unobserved(df: DataFrame) -> DataFrame:
+    """Default ``observe=`` of an observing connector's ``write``."""
+    return df
 
 
 def spark_path(url: EngineUrl) -> str:

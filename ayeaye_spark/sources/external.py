@@ -34,7 +34,14 @@ from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .base import AccessMode, ConnectorError, DataConnector, MissingDependencyError
+from .base import (
+    AccessMode,
+    ConnectorError,
+    DataConnector,
+    MissingDependencyError,
+    Observe,
+    unobserved,
+)
 
 
 class JdbcConnector(DataConnector):
@@ -46,6 +53,7 @@ class JdbcConnector(DataConnector):
     """
 
     engine_types = ["sqlite", "mysql", "mysql+pymysql", "postgresql", "jdbc"]
+    observes_writes = True
 
     _DRIVERS = {
         "sqlite": "org.sqlite.JDBC",
@@ -128,11 +136,11 @@ class JdbcConnector(DataConnector):
                 ) from e
             raise
 
-    def write(self, df: DataFrame, mode: str = "append") -> None:
+    def write(self, df: DataFrame, mode: str = "append", observe: Observe = unobserved) -> None:
         self._require_write()
         opts = self._jdbc_options()
         try:
-            df.write.format("jdbc").options(**opts).mode(mode).save()
+            observe(df).write.format("jdbc").options(**opts).mode(mode).save()
         except Exception as e:
             if "ClassNotFoundException" in str(e) or "No suitable driver" in str(e):
                 raise MissingDependencyError(

@@ -33,7 +33,9 @@ from .base import (
     ConnectorError,
     DataConnector,
     MissingDependencyError,
+    Observe,
     spark_path,
+    unobserved,
 )
 
 
@@ -102,6 +104,7 @@ class CsvConnector(DataConnector):
     """
 
     engine_types = ["csv"]
+    observes_writes = True
 
     def __init__(self, engine_url: str, access: AccessMode = AccessMode.READ, **kwargs: Any):
         super().__init__(engine_url, access, **kwargs)
@@ -208,16 +211,16 @@ class CsvConnector(DataConnector):
             )
         return df.toDF(*self.alias_fields)
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
         if self.field_names is not None:
             df = df.select(*self.field_names)  # projection on write (csv_connector.py:255-261)
         df = _apply_transform_map(df, self.transform_map)
         if self.url.bool_option("single_file"):
-            self._write_single_file(df)
+            self._write_single_file(df)  # driver-side rows: nothing to observe
             return
         (
-            df.write.mode(mode)
+            observe(df).write.mode(mode)
             .options(
                 header=True,
                 sep=self.url.option("sep", self.delimiter),
@@ -260,6 +263,7 @@ class NdjsonConnector(DataConnector):
     """
 
     engine_types = ["ndjson"]
+    observes_writes = True
 
     def read(self, spark: SparkSession) -> DataFrame:
         self._require_read()
@@ -269,12 +273,12 @@ class NdjsonConnector(DataConnector):
             reader = reader.schema(schema)
         return reader.json(spark_path(self.url))
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
         if self.url.bool_option("single_file"):
-            self._write_single_file(df)
+            self._write_single_file(df)  # driver-side rows: nothing to observe
             return
-        df.write.mode(mode).json(spark_path(self.url))
+        observe(df).write.mode(mode).json(spark_path(self.url))
 
     def _write_single_file(self, df: DataFrame) -> None:
         from pyspark.sql import functions as F
@@ -314,8 +318,9 @@ class _ColumnarLayoutWriter:
     ``bucket_by`` catalog-registered co-located buckets."""
 
     _format: str  # "parquet" | "orc"
+    observes_writes = True
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
         sort_by = self.connector_kwargs.get("sort_by")
         zorder_by = self.connector_kwargs.get("zorder_by")
@@ -338,7 +343,10 @@ class _ColumnarLayoutWriter:
                 n_files, cols = 16, zorder_by
             cols = [cols] if isinstance(cols, str) else list(cols)
             df = zorder_frame(df, cols, target_files=n_files)
-        writer = df.write.mode(mode)
+        # observe only now: the range partitioner's sampling job runs the
+        # frame below the layout a second time, and an observation there
+        # would count every row twice
+        writer = observe(df).write.mode(mode)
         partition_by = self.connector_kwargs.get("partition_by")
         if partition_by:
             # hive-style layout → partition PRUNING on reads filtered by
@@ -408,6 +416,7 @@ class AvroConnector(DataConnector):
     """
 
     engine_types = ["avro"]
+    observes_writes = True
 
     def _gate(self, exc: Exception) -> None:
         if "Failed to find data source: avro" in str(exc):
@@ -424,10 +433,10 @@ class AvroConnector(DataConnector):
         except Exception as exc:  # AnalysisException at source resolution
             self._gate(exc)
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
         try:
-            df.write.mode(mode).format("avro").save(spark_path(self.url))
+            observe(df).write.mode(mode).format("avro").save(spark_path(self.url))
         except Exception as exc:
             self._gate(exc)
 
@@ -440,6 +449,7 @@ class XmlConnector(DataConnector):
     and ``;sample_ratio=`` behave as the built-in source defines."""
 
     engine_types = ["xml"]
+    observes_writes = True
 
     @property
     def row_tag(self) -> str:
@@ -455,13 +465,13 @@ class XmlConnector(DataConnector):
             reader = reader.option("samplingRatio", ratio)
         return reader.load(spark_path(self.url))
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
         root = self.connector_kwargs.get("root_tag") or self.url.option(
             "root_tag", "rows"
         )
         (
-            df.write.mode(mode)
+            observe(df).write.mode(mode)
             .format("xml")
             .option("rowTag", self.row_tag)
             .option("rootTag", root)
@@ -480,6 +490,7 @@ class JsonConnector(DataConnector):
 
     engine_types = ["json"]
     driver_side = True
+    observes_writes = True
 
     def __init__(self, engine_url: str, access: AccessMode = AccessMode.READ, **kwargs: Any):
         super().__init__(engine_url, access, **kwargs)
@@ -520,9 +531,9 @@ class JsonConnector(DataConnector):
             raise ConnectorError("as_dataframe requires an array payload")
         return spark.createDataFrame(payload)
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
-        df.write.mode(mode).option("multiLine", True).json(spark_path(self.url))
+        observe(df).write.mode(mode).option("multiLine", True).json(spark_path(self.url))
 
 
 class UncookedConnector(DataConnector):
@@ -534,6 +545,7 @@ class UncookedConnector(DataConnector):
     """
 
     engine_types = ["file"]
+    observes_writes = True
 
     @property
     def file_mode(self) -> str:
@@ -567,6 +579,6 @@ class UncookedConnector(DataConnector):
             return spark.read.format("binaryFile").load(path)
         return spark.read.text(path)
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, mode: str = "overwrite", observe: Observe = unobserved) -> None:
         self._require_write()
-        df.write.mode(mode).text(spark_path(self.url))
+        observe(df).write.mode(mode).text(spark_path(self.url))

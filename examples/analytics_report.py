@@ -50,8 +50,7 @@ class DailyAnalyticsReport(Model):
             .cast("double")
             .alias("total_value"),
         )
-        self.daily_metrics.write(daily)
-        out["days"] = daily.count()
+        out["days"] = self.daily_metrics.write(daily)["rows"]
 
         # ordered funnel: chained MIN aggregates (no sequences)
         v = ev.where("event_type = 'view'").groupBy("user_id").agg(

@@ -46,12 +46,13 @@ class BuildAnnIndex(Model):
         emb = self.embeddings.df
         centroids = emb.where(F.col("vec_id") % self.centroid_stride == 0)
         cells = similarity.assign_cells_vectorized(emb, centroids)
-        self.index_cells.write(cells)
-        self.index_centroids.write(
+        # one row per vector and per centroid: the writes count them
+        n_vectors = self.index_cells.write(cells)["rows"]
+        n_centroids = self.index_centroids.write(
             centroids.select("vec_id", "embedding")
-        )
-        self.add_stat("n_vectors", emb.count())
-        self.add_stat("n_centroids", centroids.count())
+        )["rows"]
+        self.add_stat("n_vectors", n_vectors)
+        self.add_stat("n_centroids", n_centroids)
 
     def post_build_check(self) -> bool:
         back = self.index_cells.df
@@ -75,8 +76,7 @@ class QueryAnnIndex(Model):
         cells = self.index_cells.df
         queries = cells.where(F.col("vec_id") < self.n_queries)
         topk = similarity.ivf_topk_from_cells(cells, queries, k=self.k)
-        self.neighbors.write(topk)
-        self.add_stat("n_result_rows", topk.count())
+        self.add_stat("n_result_rows", self.neighbors.write(topk)["rows"])
 
     def post_build_check(self) -> bool:
         out = self.neighbors.df
@@ -110,8 +110,7 @@ class BuildPqIndex(Model):
             coarse=emb.where(F.col("vec_id") % self.centroid_stride == 0),
             codebook=emb.where(F.col("vec_id") < self.codebook_size),
         )
-        self.pq_codes.write(codes)
-        self.add_stat("n_code_rows", codes.count())
+        self.add_stat("n_code_rows", self.pq_codes.write(codes)["rows"])
 
     def post_build_check(self) -> bool:
         back = self.pq_codes.df
@@ -145,8 +144,7 @@ class QueryPqIndex(Model):
             codebook=emb.where(F.col("vec_id") < BuildPqIndex.codebook_size),
             k=self.k,
         )
-        self.pq_neighbors.write(topk)
-        self.add_stat("n_result_rows", topk.count())
+        self.add_stat("n_result_rows", self.pq_neighbors.write(topk)["rows"])
 
     def post_build_check(self) -> bool:
         out = self.pq_neighbors.df

@@ -121,16 +121,21 @@ class CorpusAudit(Model):
             .collect()
         )
 
-        # 5. lexical diversity: persist per-doc, report the dregs
+        # 5. lexical diversity: persist per-doc, report the dregs.  The
+        # summary over scored docs is observed on the write and the dregs
+        # come from the persisted table, so token_diversity runs once
         div = textops.token_diversity(docs, "doc_id", "text")
-        self.diversity.write(div)
-        div_stats = div.where(F.col("n_tokens") > 0).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("diversity_ppm").alias("min_ppm"),
-            F.expr("sum(diversity_ppm) div count(1)").alias("mean_ppm"),
-        ).collect()[0]
+        div_stats = self.diversity.write(
+            div,
+            n=F.expr("count(CASE WHEN n_tokens > 0 THEN 1 END)"),
+            min_ppm=F.expr("min(CASE WHEN n_tokens > 0 THEN diversity_ppm END)"),
+            mean_ppm=F.expr(
+                "sum(CASE WHEN n_tokens > 0 THEN diversity_ppm END) "
+                "div count(CASE WHEN n_tokens > 0 THEN 1 END)"
+            ),
+        )
         worst = (
-            div.where(F.col("n_tokens") > 0)
+            self.diversity.df.where(F.col("n_tokens") > 0)
             .orderBy(F.asc("diversity_ppm"), F.asc("doc_id"))
             .limit(self.worst_docs)
             .collect()

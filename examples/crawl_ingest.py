@@ -77,9 +77,7 @@ class CrawlIngest(Model):
                              "n_links"),
             "keep_url",
         ).select("canonical_url", "keep_url", "dup_count", "n_links", "text")
-        self.corpus.write(corpus)
-
-        n_survivors = corpus.count()
+        n_survivors = self.corpus.write(corpus)["rows"]
         self.shards.write(corpus.select("keep_url", "text"))
         shard_rows = self.shards.last_manifest or []
 

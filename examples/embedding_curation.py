@@ -60,8 +60,7 @@ class EmbeddingCuration(Model):
         surviving = similarity.semantic_dedup_survivors(
             emb, centroids, threshold=self.dedup_threshold
         )
-        self.survivors.write(surviving)
-        n_kept = surviving.count()
+        n_kept = self.survivors.write(surviving)["rows"]
 
         # interchange export: the curated vectors as Arrow IPC shards —
         # the zero-copy hand-off to single-node tooling (pandas/polars/
@@ -76,8 +75,7 @@ class EmbeddingCuration(Model):
         negs = similarity.hard_negatives(
             surviving, probes, k=self.negatives_per_query
         )
-        self.hard_negatives.write(negs)
-        n_negs = negs.count()
+        n_negs = self.hard_negatives.write(negs)["rows"]
 
         self.report.data = {
             "input_vectors": n_in,

@@ -73,9 +73,7 @@ class HybridSearch(Model):
             docs.select("doc_id", "lang", F.substring("text", 1, 120).alias("snippet")),
             "doc_id",
         )
-        self.results.write(enriched)
-
-        rows = enriched.count()
+        rows = self.results.write(enriched)["rows"]
         n_both = enriched.where(F.col("n_lists") == 2).count()
         self.report.data = {
             "query_terms": list(self.query_terms),

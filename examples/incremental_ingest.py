@@ -56,15 +56,12 @@ class IncrementalIngest(Model):
         profiled = textops.with_quality_score(
             textops.with_lang_id(kept, "text"), "text"
         ).select("doc_id", "text", F.col("lang_pred").alias("lang"), "quality_ppm")
-        # materialize once: the write below and the report count would
-        # otherwise each re-run the full dedup + profiling lineage
-        profiled = profiled.localCheckpoint(eager=False)
 
+        # the write counts what it accepted: the dedup + profiling
+        # lineage runs once
         out = self.accepted
         out.connector_kwargs["partition_by"] = ["lang"]
-        out.write(profiled)
-
-        report["accepted"] = profiled.count()
+        report["accepted"] = out.write(profiled)["rows"]
         report["rejected_near_dup"] = report["batch_size"] - report["accepted"]
         self.ingest_report.data = report
         for k, v in report.items():

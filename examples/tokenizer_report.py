@@ -52,7 +52,7 @@ class TokenizerReport(Model):
             docs, "text", n_merges=self.n_merges
         ).orderBy("merge_rank")
         coherence = textops.bigram_coherence(docs, "doc_id", "text")
-        self.coherence_table.write(coherence)
+        n_docs = self.coherence_table.write(coherence)["rows"]
 
         flagged = coherence.where(
             (F.col("n_bigrams") > 0)
@@ -70,7 +70,7 @@ class TokenizerReport(Model):
                  "count": r["pair_count"]}
                 for r in merges.collect()
             ],
-            "n_docs": coherence.count(),
+            "n_docs": n_docs,
             "n_low_coherence": flagged,
         }
         self.log(

@@ -154,7 +154,7 @@ class TrainingCorpusPipeline(Model):
             train.select("doc_id", "text"), "doc_id", "text",
             vocab_size=4096, budget=self.pack_budget,
         )
-        self.token_shards.write(shards)
+        n_shards = self.token_shards.write(shards)["rows"]
 
         # 9. interchange export: the curated train docs as WebDataset
         # tar shards ({doc_id}.txt members, byte-deterministic) — the
@@ -166,7 +166,7 @@ class TrainingCorpusPipeline(Model):
 
         funnel["n_packs"] = packed.select("pack_id").distinct().count()
         funnel["total_tokens"] = packed.agg(F.sum("ntok")).collect()[0][0]
-        funnel["n_shards"] = shards.count()
+        funnel["n_shards"] = n_shards
         funnel["shard_tokens"] = shards.agg(
             F.sum("n_tokens")
         ).collect()[0][0]

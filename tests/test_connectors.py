@@ -1501,3 +1501,71 @@ class TestWarc:
             list(parse_warc_bytes(b"HTTP/1.1 200 OK\r\n\r\nnope"))
         with pytest.raises(ConnectorError, match="Content-Length"):
             list(parse_warc_bytes(b"WARC/1.0\r\nWARC-Type: x\r\n\r\n"))
+
+
+class TestWriteObservedMetrics:
+    """``DatasetHandle.write`` reports the rows and aggregates it wrote,
+    observed on the write job itself."""
+
+    @pytest.mark.parametrize("scheme,layout", [
+        pytest.param("parquet", {}, id="parquet"),
+        pytest.param("parquet", {"sort_by": "x"}, id="parquet-sort_by"),
+        pytest.param("parquet", {"sort_by": (3, ["x"])}, id="parquet-sort_by_n"),
+        pytest.param("parquet", {"zorder_by": (4, ["x", "g"])}, id="parquet-zorder_by"),
+        pytest.param("parquet", {"partition_by": ["g"]}, id="parquet-partition_by"),
+        pytest.param("orc", {"sort_by": "x"}, id="orc-sort_by"),
+        pytest.param("csv", {}, id="csv"),
+        pytest.param("ndjson", {}, id="ndjson"),
+        pytest.param("json", {}, id="json"),
+        pytest.param("xml", {}, id="xml"),
+    ])
+    def test_metrics_equal_read_back(self, spark, tmp_path, scheme, layout):
+        """A range-partitioned layout samples its input in a job of its
+        own; an observation below the layout would count those rows
+        again (1000 for 500)."""
+        from pyspark.sql import functions as F
+
+        from ayeaye_spark import Connect
+
+        df = spark.range(0, 500, 1, 4).select(
+            (F.col("id") * 7 % 500).alias("x"), (F.col("id") % 5).alias("g")
+        )
+        target = Connect(
+            engine_url=f"{scheme}://{tmp_path}/t", access=AccessMode.READWRITE, **layout
+        ).handle(spark)
+        got = target.write(df, total=F.sum("x"))
+
+        back = spark.read.format("json" if scheme == "ndjson" else scheme).options(
+            header=True, inferSchema=True, rowTag="row"
+        ).load(f"{tmp_path}/t")
+        want = back.agg(F.count(F.lit(1)).alias("rows"), F.sum("x").alias("total")).first()
+        assert got == {"rows": want["rows"], "total": want["total"]} == {
+            "rows": 500, "total": 124750,
+        }
+        assert target.rows_written == 500
+
+    @pytest.mark.parametrize(
+        "url", ["csv://{tmp}/one.csv;single_file", "arrow://{tmp}/shards;key=x;shards=2"]
+    )
+    def test_unobserved_write_returns_none_without_waiting(self, spark, tmp_path, url):
+        """Paths that run no DataFrameWriter action on the frame never
+        wait on an observation that would not arrive."""
+        import threading
+
+        from pyspark.sql import functions as F
+
+        from ayeaye_spark import Connect
+
+        df = spark.range(20).select(F.col("id").alias("x"))
+        target = Connect(
+            engine_url=url.format(tmp=tmp_path), access=AccessMode.READWRITE
+        ).handle(spark)
+        result = {}
+        worker = threading.Thread(
+            target=lambda: result.setdefault("got", target.write(df)), daemon=True
+        )
+        worker.start()
+        worker.join(60)
+        assert not worker.is_alive(), "write blocked on an observation"
+        assert result == {"got": None}
+        assert target.rows_written is None

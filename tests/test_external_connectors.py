@@ -424,6 +424,18 @@ class TestJdbcLiveDerby:
             (1, "aye-aye"), (2, "sloth"), (3, "loris")
         }
 
+    def test_write_reports_rows_and_metrics(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        from ayeaye_spark import AccessMode, Connect
+
+        target = Connect(
+            engine_url=self._url(tmp_path, table="counted"), access=AccessMode.READWRITE
+        ).handle(spark)
+        got = target.write(spark.range(10).withColumnRenamed("id", "k"), total=F.sum("k"))
+        back = target.read().agg(F.count(F.lit(1)).alias("rows"), F.sum("k").alias("total"))
+        assert got == back.first().asDict() == {"rows": 10, "total": 45}
+
     def test_sql_pushdown_runs_in_database(self, spark, tmp_path):
         from ayeaye_spark import AccessMode
         from ayeaye_spark.sources.external import JdbcConnector

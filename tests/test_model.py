@@ -61,6 +61,29 @@ class TestModelLifecycle:
         back = {r["where"]: r["names"] for r in spark.read.parquet(str(out_dir)).collect()}
         assert back == {"bog": "frog|toad", "desert": "snake"}
 
+    def test_rows_written_per_dataset(self, spark, animals_csv, tmp_path):
+        class Split(Model):
+            animals = Connect(engine_url=f"csv://{animals_csv}")
+            bog = Connect(engine_url=f"parquet://{tmp_path}/bog.parquet", access=AccessMode.WRITE)
+            rest = Connect(
+                engine_url=f"parquet://{tmp_path}/rest.parquet", access=AccessMode.WRITE,
+                sort_by="name",
+            )
+
+            def build(self):
+                df = self.animals.df
+                self.bog.write(df.where("where = 'bog'"))
+                self.rest.write(df.where("where != 'bog'"))
+
+        m = Split()
+        m.log_to_stdout = False
+        assert m.go(spark) is True
+        back = {
+            name: spark.read.parquet(str(tmp_path / f"{name}.parquet")).count()
+            for name in ("bog", "rest")
+        }
+        assert m.stats["rows_written"] == back == {"bog": 2, "rest": 1}
+
     def test_pre_check_failure_aborts(self, spark, animals_csv, tmp_path):
         GroupAnimals, _ = make_grouper(animals_csv, tmp_path, spark)
 
@@ -262,14 +285,12 @@ class TestChecks:
                 spark.createDataFrame([(1,), (2,)], ["year"]), "year"
             )
 
-    def test_observed_metrics(self, spark):
-        from pyspark.sql import functions as F
-
+    def test_observed_metrics(self, spark, tmp_path):
         df = spark.createDataFrame([(1,), (2,), (3,)], ["x"])
-        df2, obs = checks.observed(df, "m", rows=F.count(F.lit(1)), total=F.sum("x"))
-        df2.write.format("noop").mode("overwrite").save()
-        assert obs.get["rows"] == 3
-        assert obs.get["total"] == 6
+        target = Connect(
+            engine_url=f"parquet://{tmp_path}/x.parquet", access=AccessMode.WRITE, sort_by="x"
+        ).handle(spark)
+        assert target.write(df, total=F.sum("x")) == {"rows": 3, "total": 6}
 
 
 class TestModelRunner:

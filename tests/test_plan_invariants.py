@@ -158,8 +158,6 @@ TEST_ONLY_SURFACE = {
         "user-facing pre/post_build_check helper",
     "ayeaye_spark/plans/checks.py::assert_conserved":
         "user-facing pre/post_build_check helper",
-    "ayeaye_spark/plans/checks.py::observed":
-        "user-facing build-time counters via df.observe",
     "ayeaye_spark/sources/listing.py::expand_pattern":
         "reference-parity API: per-file engine_urls for MultiConnector",
     "ayeaye_spark/sources/webdataset.py::members_to_samples":
